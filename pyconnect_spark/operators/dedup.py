@@ -63,17 +63,22 @@ def _hash_params(i: int) -> tuple[int, int]:
            (SELECT COUNT(DISTINCT text) FROM documents) AS n_after_dedup,
            (SELECT COUNT(*) FROM (SELECT DISTINCT lang, source FROM documents)) AS n_lang_source
     """,
-    doc="Exact dedup: dropDuplicates on the content column (one shuffle on "
-    "hash(text)); at 100 TB dedup on sha2(text) instead to shuffle 32-byte "
-    "keys, not documents (see tx03_fingerprint).",
+    doc="Exact dedup counts in ONE aggregate: the total, the distinct "
+    "contents and the distinct (lang, source) pairs (Spark expands the two "
+    "distinct keys into one shuffle on hash(key)); at 100 TB count "
+    "distinct sha2(text) instead to shuffle 32-byte keys, not documents "
+    "(see tx03_fingerprint).",
     tags=("dedup", "llm"),
 )
 def dd01(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = t(spark, sf_dir, "documents")
-    total = docs.agg(F.count("*").alias("n_total"))
-    deduped = docs.dropDuplicates(["text"]).agg(F.count("*").alias("n_after_dedup"))
-    pairs = docs.dropDuplicates(["lang", "source"]).agg(F.count("*").alias("n_lang_source"))
-    return total.crossJoin(deduped).crossJoin(pairs)
+    # The (lang, source) key is one struct, which is never null, so a
+    # pair with a null member still counts as a distinct pair (SELECT
+    # DISTINCT semantics), unlike a two-argument count(DISTINCT ...).
+    return t(spark, sf_dir, "documents").agg(
+        F.count("*").alias("n_total"),
+        F.count_distinct("text").alias("n_after_dedup"),
+        F.count_distinct(F.struct("lang", "source")).alias("n_lang_source"),
+    )
 
 
 def _shingles(docs: DataFrame, n: int = 3) -> DataFrame:
@@ -85,6 +90,16 @@ def _shingles(docs: DataFrame, n: int = 3) -> DataFrame:
         F.expr(f"transform(sequence(1, greatest(length(text) - {n - 1}, 0)), i -> substring(text, i, {n}))")
     )
     return docs.select("doc_id", F.explode(arr).alias("sh"))
+
+
+def _word_shingle_sql(toks: str, n: int = 3) -> str:
+    """SQL for the distinct word n-grams of token-array column ``toks``,
+    in first-seen order. (SQL text: one parse on the JVM instead of a
+    py4j call per expression node.)"""
+    return (
+        f"array_distinct(transform(sequence(1, greatest(size({toks}) - {n - 1}, 1)), "
+        f"i -> concat_ws(' ', slice({toks}, i, {n}))))"
+    )
 
 
 def _word_shingles(
@@ -108,13 +123,9 @@ def _word_shingles(
     with_toks = docs.select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
     )
-    arr = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size("toks") - (n - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice("toks", i, n)),
-        )
+    return with_toks.select(
+        "doc_id", F.explode(F.expr(_word_shingle_sql("toks", n))).alias("sh")
     )
-    return with_toks.select("doc_id", F.explode(arr).alias("sh"))
 
 
 @REGISTRY.register(
@@ -187,12 +198,6 @@ def minhash_signatures(
     with_toks = docs.select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
     )
-    shingle_arr = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size("toks") - (n - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice("toks", i, n)),
-        )
-    )
     # Small local files arrive as one partition; spread the map work
     # (conditional + keyed: no-op when the scan already has >= cores
     # partitions, hash-keyed so no round-robin pre-sort).
@@ -201,18 +206,12 @@ def minhash_signatures(
     # what makes the whole MinHash+LSH pipeline oracle-checkable in DuckDB
     # (measured cost parity with xxhash64 at sf0.1: the 64 affine
     # permutations dominate, not the shingle hash).
-    hashed = (
-        spread(with_toks, "doc_id")
-        .select(
-            "doc_id",
-            F.transform(
-                shingle_arr,
-                lambda s: F.pmod(
-                    F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-                    F.lit(_MERSENNE),
-                ),
-            ).alias("hs"),
-        )
+    hashed = spread(with_toks, "doc_id").select(
+        "doc_id",
+        F.expr(
+            f"transform({_word_shingle_sql('toks', n)}, "
+            f"s -> pmod(CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT), {_MERSENNE}))"
+        ).alias("hs"),
     )
     # One aggregate pass with a k-wide accumulator instead of k separate
     # array_min(transform(...)) traversals. Values are bit-identical (the
@@ -223,21 +222,16 @@ def minhash_signatures(
     # Under bench's min-of-2 on a steal-prone host, a 6 s pass-1 makes the
     # reported min hostage to pass-2 noise — this was the bulk of the
     # round-3 "dd03 2x regression" (the md5 family itself re-measured at
-    # cost parity with xxhash64 this round).
-    params = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for (a, b) in (
-                _hash_params(i + param_offset) for i in range(n_hashes)
-            )
-        ]
+    # cost parity with xxhash64 this round). The k literal (a, b) pairs
+    # are SQL text: built column by column they cost ~0.5 s of py4j calls.
+    params = ", ".join(
+        f"named_struct('a', {a}, 'b', {b})"
+        for a, b in (_hash_params(i + param_offset) for i in range(n_hashes))
     )
-    signature = F.aggregate(
-        F.col("hs"),
-        F.array(*[F.lit(_MERSENNE).cast("long")] * n_hashes),
-        lambda acc, h: F.zip_with(
-            acc, params, lambda m, p: F.least(m, (h * p["a"] + p["b"]) % F.lit(_MERSENNE))
-        ),
+    init = ", ".join([f"CAST({_MERSENNE} AS BIGINT)"] * n_hashes)
+    signature = F.expr(
+        f"aggregate(hs, array({init}), (acc, h) -> zip_with(acc, array({params}), "
+        f"(m, p) -> least(m, (h * p.a + p.b) % {_MERSENNE})))"
     )
     return hashed.select("doc_id", signature.alias("signature"))
 
@@ -254,31 +248,13 @@ def band_keys(
     identically. ``salt`` prefixes the band label (dd42 draws an
     independent bucket family with it; '' = the canonical dd03 keys)."""
     rows = _N_HASHES // n_bands
-    return sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat_ws(
-                                    ":",
-                                    F.lit(f"{salt}{i}"),
-                                    *[F.col("signature")[i * rows + j] for j in range(rows)],
-                                )
-                            ),
-                            1,
-                            15,
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("band", "bhash"),
+    keys = ", ".join(
+        f"CAST(conv(substring(md5(concat_ws(':', '{salt}{i}', "
+        + ", ".join(f"signature[{i * rows + j}]" for j in range(rows))
+        + ")), 1, 15), 16, 10) AS BIGINT)"
+        for i in range(n_bands)
     )
+    return sig.select("doc_id", F.expr(f"posexplode(array({keys}))").alias("band", "bhash"))
 
 
 def lsh_candidate_pairs(
@@ -483,127 +459,113 @@ def connected_components(
     """Connected components by iterative min-label propagation.
 
     nodes(node) ∪ edges(a, b) → (node, root) where root = min node id in
-    the component. Each iteration: every node takes the min of its own
-    label and its neighbors' labels. Should convergence not arrive within
-    the first few rounds (deep, path-like components), a pointer-doubling
-    shortcut (root := root's root) kicks in so labels start traveling
-    2^k hops per round — convergence is O(log diameter) and the default
-    cap covers any realistic component, at zero extra cost for the
-    shallow graphs near-dup clustering actually produces. Stops early
-    when no label changes. The
-    label frame has its lineage truncated each round (an unbounded
-    iterative plan otherwise re-executes from the source every iteration
-    and eventually overwhelms the optimizer): via reliable checkpoint()
-    when the session has a checkpoint dir configured (the cluster path —
-    survives executor loss), else localCheckpoint() (single-node path).
+    the component; ``nodes`` holds each node once. Each round every node
+    takes the min of its own label and its neighbours' labels, and the
+    loop stops when no label changes. Should convergence not arrive
+    within the first few rounds (deep, path-like components), a
+    pointer-doubling shortcut (root := root's root) kicks in so labels
+    travel 2^k hops per round: convergence is O(log diameter), and the
+    default cap covers any realistic component at no cost for the shallow
+    graphs near-dup clustering produces.
 
-    Diameter bounds iterations (near-dup clusters are shallow); each round
-    is one join + one aggregation — the standard large-graph formulation.
+    Plan shape (guide §1.2: fewer serial passes). Rounds run over the
+    nodes that touch an edge only, so at 100 TB the label frame is
+    |dup-suspects|, not |corpus|. A label row carries its node's
+    adjacency list (vertex-centric, as in Pregel), so a round is a single
+    shuffle with no join: every node sends its label along its adjacency
+    to its neighbours, and one aggregation by node takes the min of the
+    messages and its own row, keeps the adjacency and sets a "changed"
+    flag. (A hub's adjacency is one row of its degree; an edge-list join
+    would spread it instead.) Each round is checkpointed eagerly, which
+    truncates the lineage (reliable checkpoint() when the session has a
+    checkpoint dir: the cluster path, survives executor loss;
+    localCheckpoint() otherwise), and the flag rides that same job as an
+    observed metric (DataFrame.observe): there is no separate
+    convergence probe, and no emptiness probe either, since an empty edge
+    list makes an empty round 0 whose flag is unset. Isolated nodes join
+    once at the end through one more aggregation by node. A shallow graph
+    therefore costs the edge derivation plus two jobs per round
+    (shuffle, checkpoint) and two for the final attach.
     """
-    def _truncate(df: DataFrame, *, lazy: bool = False) -> DataFrame:
-        # Reliable checkpoint when a dir is configured (cluster: HDFS/S3,
-        # survives executor loss); localCheckpoint otherwise (local mode:
-        # executor == driver, nothing extra to lose). ``lazy`` applies to
-        # the local path only: materialization then rides the NEXT action
-        # instead of a dedicated blocking job (reliable checkpoint always
-        # runs its own write job, so laziness buys nothing there).
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is not None:
-            return df.checkpoint()
-        return df.localCheckpoint(eager=not lazy)
+    from pyspark.sql import Observation
 
-    # Materialize the edge set ONCE: without this every iteration re-derives
-    # the edges from source (for dd05 that is the quadratic shingle
-    # self-join, re-executed per round — measured ~5 s vs ~2 s at sf0.1).
-    # The symmetric edge list is small relative to the corpus (near-dup
-    # graphs are sparse), so the checkpoint is cheap and also truncates
-    # the edge lineage for every subsequent round. The two directions come
-    # from ONE explode over the edge rows (not edges UNION reversed-edges,
-    # which plans the whole upstream edge derivation twice), and the
-    # emptiness probe is a COUNT over the frame being lazily checkpointed,
-    # so materialize + probe is one job instead of two (guide §1.2: fewer
-    # serial passes).
-    sym = _truncate(
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("a"), F.col("b").alias("b")),
-                    F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
-                )
-            ).alias("e")
-        ).select("e.a", "e.b"),
-        lazy=True,
+    def _round(labels: DataFrame) -> tuple[DataFrame, bool]:
+        obs = Observation()
+        labels = labels.observe(obs, F.max("_changed").alias("changed"))
+        if labels.sparkSession.sparkContext.getCheckpointDir() is not None:
+            labels = labels.checkpoint(eager=True)
+        else:
+            labels = labels.localCheckpoint(eager=True)
+        return labels.drop("_changed"), bool(obs.get["changed"])
+
+    # Round 0 builds the adjacency rows from the symmetric edge list; its
+    # two directions come from ONE explode over the edge rows (not edges
+    # UNION reversed edges, which plans the upstream edge derivation
+    # twice). Every label starts as the node itself, so round 0 is the
+    # min over the neighbours' ids.
+    sym = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("a").alias("a"), F.col("b").alias("b")),
+                F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
+            )
+        ).alias("e")
+    ).select("e.a", "e.b")
+    labels, changed = _round(
+        sym.groupBy(F.col("a").alias("node"))
+        .agg(F.min("b").alias("nroot"), F.collect_set("b").alias("nbrs"))
+        .select(
+            "node",
+            F.least("node", "nroot").alias("root"),
+            "nbrs",
+            (F.col("nroot") < F.col("node")).alias("_changed"),
+        )
     )
-    if sym.count() == 0:
-        return nodes.select(F.col("node"), F.col("node").alias("root"))
-    # Iterate ONLY over nodes that touch an edge: isolated nodes are their
-    # own component by definition and would otherwise ride through every
-    # join/aggregate round as dead weight. Near-dup graphs are sparse, so
-    # this typically shrinks the iteration frames by orders of magnitude —
-    # at 100 TB the label frame is |dup-suspects|, not |corpus|. Lazy:
-    # materializes inside iteration 0's first shuffle job.
-    edge_nodes = _truncate(sym.select(F.col("a").alias("node")).distinct(), lazy=True)
-    labels = edge_nodes.select("node", F.col("node").alias("root"))
-    # Near-dup graphs are shallow, so plain one-hop propagation converges
-    # in a handful of rounds with one join each. If a component is deeper
-    # than _DOUBLING_AFTER hops (path-like graphs), switch on pointer
-    # doubling (the "shortcut" step of large/small-star CC: root := the
-    # root's root), which moves labels 2^k hops after k rounds — so the
-    # cap covers diameters up to ~2^max_iter rather than max_iter.
-    # Without the doubling fallback, any component with diameter >
-    # max_iter silently converged to WRONG labels.
+    # If a component is deeper than _DOUBLING_AFTER hops (path-like
+    # graphs), pointer doubling moves labels 2^k hops after k rounds, so
+    # the cap covers diameters up to ~2^max_iter rather than max_iter.
+    # Without it any component with diameter > max_iter silently
+    # converged to WRONG labels.
     _DOUBLING_AFTER = 6
-    for it in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym.b == labels.node)
-            .groupBy(sym.a.alias("node"))
-            .agg(F.min("root").alias("nroot"))
+    for it in range(1, max_iter):
+        if not changed:
+            break
+        sent = labels.select(
+            F.explode("nbrs").alias("node"), "root", F.lit(None).alias("nbrs")
         )
         new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("root"), F.coalesce(F.col("nroot"), F.col("root"))).alias("root"),
-                (F.col("nroot") < F.col("root")).alias("_changed"),
+            labels.unionByName(sent)
+            .groupBy("node")
+            .agg(
+                F.min("root").alias("root"),
+                # the node's own row is the one that carries an adjacency
+                F.min(F.when(F.col("nbrs").isNotNull(), F.col("root"))).alias("old"),
+                F.first("nbrs", ignorenulls=True).alias("nbrs"),
             )
+            .select("node", "root", "nbrs", (F.col("root") < F.col("old")).alias("_changed"))
         )
         if it >= _DOUBLING_AFTER:
             parent = new_labels.select(
                 F.col("node").alias("p_node"), F.col("root").alias("p_root")
             )
-            new_labels = (
-                new_labels.join(parent, new_labels.root == F.col("p_node"), "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("root"), F.coalesce(F.col("p_root"), F.col("root"))
-                    ).alias("root"),
-                    (F.col("_changed") | (F.col("p_root") < F.col("root"))).alias("_changed"),
-                )
+            new_labels = new_labels.join(
+                parent, new_labels.root == F.col("p_node"), "left"
+            ).select(
+                "node",
+                F.least(F.col("root"), F.coalesce(F.col("p_root"), F.col("root"))).alias("root"),
+                "nbrs",
+                (F.col("_changed") | (F.col("p_root") < F.col("root"))).alias("_changed"),
             )
-        new_labels = _truncate(new_labels, lazy=True)
-        labels = new_labels.drop("_changed")
-        # Convergence probe = one tiny driver job per round. Shallow graphs
-        # (the near-dup norm) exit within the first few rounds, where the
-        # probe is what enables the early exit — keep it every round. Once
-        # pointer doubling engages (deep, path-like graphs), labels travel
-        # 2^k hops per round and one extra iteration is cheaper than it
-        # was in the one-hop regime — probe every 2nd round to halve the
-        # driver round-trips on the long tail. The probe is a full
-        # aggregate (not filter+limit), so it computes every partition of
-        # the lazily-checkpointed frame: materialize + probe fuse into ONE
-        # job per round where the eager-checkpoint-then-limit form took
-        # two (guide §1.2).
-        if it >= _DOUBLING_AFTER and (it - _DOUBLING_AFTER) % 2 == 1:
-            continue
-        if not new_labels.agg(F.max("_changed")).first()[0]:
-            break
-    # Singletons re-attached once, outside the loop (anti join, no shuffle
-    # of the iteration frames).
-    singletons = nodes.join(edge_nodes, "node", "left_anti").select(
-        "node", F.col("node").alias("root")
+        labels, changed = _round(new_labels)
+    # Every labelled node's root is at most its own id, so the min over
+    # the labels and the nodes' identity rows attaches the isolated nodes
+    # without a join against the corpus-scale node frame.
+    return (
+        labels.select("node", "root")
+        .unionByName(nodes.select("node", F.col("node").alias("root")))
+        .groupBy("node")
+        .agg(F.min("root").alias("root"))
     )
-    return labels.unionAll(singletons)
 
 
 def word_jaccard_edges(docs: DataFrame, threshold: float) -> DataFrame:
@@ -646,11 +608,9 @@ def word_jaccard_edges(docs: DataFrame, threshold: float) -> DataFrame:
     return common.filter(jacc >= threshold).select("a", "b")
 
 
-# Broadcast cap for the LSH verify tier's candidate-pair / candidate-doc
-# frames: 1M pairs is ~80 MB as a built hash relation (2 longs + 2 ints a
-# row) — comfortably inside executor memory at any deployment size, far
-# under the 8 GB broadcast hard cap. Above it, the verify tier falls back
-# to the shuffle form. Tests force it to 0 to exercise the fallback.
+# Broadcast cap for dd44's cluster-member frame: 1M rows is well inside
+# executor memory at any deployment size, far under the 8 GB broadcast
+# hard cap. Above it the member restriction is a plain semi-join.
 _VERIFY_BCAST_CAP = 1_000_000
 
 # Doc-count cap for dd34's measured broadcast-vs-merge decision: under it
@@ -667,7 +627,7 @@ def lsh_verified_edges(
     (dd03's signatures — only co-bucketed docs ever meet) verified by
     EXACT word-3-gram Jaccard computed on the candidates alone. The
     all-pairs-within-bucket quadratic of the exact tier is replaced by
-    |candidates| x shingles join work, which is what survives 100 TB.
+    |candidates| x shingles work, which is what survives 100 TB.
 
     Exactness: candidate recall is the banded-LSH S-curve (8 bands x 8
     rows: ~0.9998 at J=0.9, lower right at the 0.8 threshold edge); the
@@ -675,77 +635,37 @@ def lsh_verified_edges(
     set contains every exact edge (pinned by
     test_llm_ops::test_dd05_lsh_tier_agrees_with_exact_tier), so dd05's
     exact-edge oracle stays hash-green while the declared plan is the
-    scale-shaped one."""
-    cand = lsh_candidate_pairs(minhash_signatures(docs), n_bands).select(
-        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
+    scale-shaped one.
+
+    Plan: one plan, no action. The signatures are minhash_signatures'
+    own plan, so a session that ran dd03 reads them from its cache
+    (CacheManager matches by canonical plan). Each document's shingle
+    set is one row (doc_id, array of xxhash64 shingle hashes, the same
+    hashes the exact tier joins on) computed over the same spread
+    token frame as the signatures (one reused exchange). A candidate
+    pair meets both sets by doc key, and the intersection is an array
+    operation on that row, so no shingle-grain row is ever exploded,
+    shuffled or grouped. Both set joins read the one `sets` frame, so
+    the planner builds it once: a broadcast while its size estimate is
+    under the session's threshold, a shuffle join on doc_id beyond —
+    the planner's choice, with no driver-side size probe."""
+    cand = lsh_candidate_pairs(minhash_signatures(docs), n_bands)
+    toks = docs.select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks"))
+    sets = spread(toks, "doc_id").select(
+        "doc_id", F.expr(f"transform({_word_shingle_sql('toks')}, sh -> xxhash64(sh))").alias("hs")
     )
-    base = _word_shingles(docs).select("doc_id", F.xxhash64("sh").alias("h"))
-    sz = base.groupBy("doc_id").agg(F.count("*").alias("n"))
-    cand = (
-        cand.join(
-            sz.select(F.col("doc_id").alias("a"), F.col("n").alias("na")), "a"
-        )
-        .join(sz.select(F.col("doc_id").alias("b"), F.col("n").alias("nb")), "b")
+    x, y = sets.alias("x"), sets.alias("y")
+    na, nb = F.size("x.hs"), F.size("y.hs")
+    nc = F.size(F.array_intersect("x.hs", "y.hs"))
+    return (
+        cand.join(x, F.col("doc_a") == F.col("x.doc_id"))
+        .join(y, F.col("doc_b") == F.col("y.doc_id"))
         # size-ratio bound, exactness-preserving (same prune as the exact
         # tier): J <= min/max, so ratio < t can never pass the J >= t gate
-        .filter(
-            F.least("na", "nb") >= threshold * F.greatest("na", "nb")
-        )
-        # Pinned: consumed three times below (doc set, pair filter, and
-        # via both broadcasts) — unpinned, each broadcast build would
-        # re-run the whole LSH candidate pipeline.
-        .localCheckpoint(eager=False)
+        .filter(F.least(na, nb) >= threshold * F.greatest(na, nb))
+        .filter(nc.cast("double") / (na + nb - nc) >= threshold)
+        .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     )
-    # Size gate for the verify tier's broadcasts (round-11 verdict item 4 /
-    # advice item 1): the count materializes the pinned candidate frame —
-    # a job the first consumer would otherwise run — and MEASURES the
-    # dup-suspect slice instead of asserting it is small. On a dup-heavy
-    # pathological corpus the candidate set is not guaranteed KB-scale,
-    # and an explicit F.broadcast over the cap fails the job instead of
-    # degrading; over the cap we take the shuffle form below.
-    n_cand = cand.count()
-    if n_cand <= _VERIFY_BCAST_CAP:
-        # Verify tier, dd14's shape (guide §3.2 posture): restrict the
-        # shingle frame to candidate DOCS via a broadcast join BEFORE any
-        # shingle-keyed exchange, so the corpus-scale base is never
-        # shuffled — the old form shuffled the FULL shingle frame twice
-        # (once by doc to meet the candidates, once by (doc, hash) for the
-        # intersection). PER-SIDE restriction (a-docs / b-docs separately,
-        # round-11 advice item 2): a boilerplate shingle hash shared by k
-        # candidate docs expands to k_a x k_b rows in the h-join instead
-        # of k^2/2 — the hot-key blowup never materializes pairs both
-        # banding and the size-ratio bound already pruned from one side.
-        a_docs = cand.select(F.col("a").alias("doc_id")).distinct()
-        b_docs = cand.select(F.col("b").alias("doc_id")).distinct()
-        xa = base.join(F.broadcast(a_docs), "doc_id").select(
-            F.col("doc_id").alias("a"), "h"
-        )
-        yb = base.join(F.broadcast(b_docs), "doc_id").select(
-            F.col("doc_id").alias("b"), "h"
-        )
-        common = (
-            xa.join(yb, "h")
-            .where(F.col("a") < F.col("b"))
-            .join(F.broadcast(cand), ["a", "b"])
-            .groupBy("a", "b", "na", "nb")
-            .agg(F.count("*").alias("nc"))
-        )
-    else:
-        # Shuffle fallback (the pre-broadcast form, exercised by
-        # tests/test_llm_ops.py with the cap forced to 0): join the
-        # shingle frame to the candidate pairs by doc keys — two
-        # corpus-scale exchanges, but no broadcast of an over-cap
-        # candidate set. Same aggregate, same result.
-        x = base.select(F.col("doc_id").alias("a"), "h")
-        y = base.select(F.col("doc_id").alias("b"), "h")
-        common = (
-            cand.join(x, "a")
-            .join(y, ["b", "h"])
-            .groupBy("a", "b", "na", "nb")
-            .agg(F.count("*").alias("nc"))
-        )
-    jacc = F.col("nc").cast("double") / (F.col("na") + F.col("nb") - F.col("nc"))
-    return common.filter(jacc >= threshold).select("a", "b")
 
 
 _DD05_SHINGLES_SQL = """

@@ -345,47 +345,50 @@ _SEED_IVF_CTES = f"""
     seedcells AS (SELECT vec_id, srk AS cell FROM sscored WHERE rk = 1)"""
 
 
-def ivf_seed_frame(emb: DataFrame, n_cells: int) -> DataFrame:
-    """The n_cells md5-picked seed vectors (seed_id, seed_emb, srk):
-    TakeOrderedAndProject selects them (per-partition top-k), the cell
-    ids srk rank the tiny slice by broadcast triangular join (rankops) —
-    no single-partition row_number window."""
-    from pyconnect_spark.operators.rankops import rank_small_frame
-
-    top = (
-        emb.select(
-            F.col("vec_id").alias("seed_id"),
-            F.col("embedding").alias("seed_emb"),
-            F.md5(F.col("vec_id").cast("string")).alias("h"),
-        )
-        .orderBy("h", "seed_id")
-        .limit(n_cells)
+def _md5_first(emb: DataFrame, n: int, salt: str = "") -> DataFrame:
+    """The n vectors first in md5(vec_id || salt) order (ties by vec_id)
+    as ONE row: ``top``, array<struct<h, id, v>> in that order, so a
+    vector's 1-based rank is its array position. TakeOrderedAndProject
+    keeps n rows per partition and one aggregate sorts the n survivors:
+    no WindowExec, no rank join, no exchange of its own (the survivors
+    already sit in one partition)."""
+    s = F.struct(
+        F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(salt))).alias("h"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
     )
     return (
-        rank_small_frame(
-            top,
-            F.struct(F.col("h").alias("kh"), F.col("seed_id").alias("ks")),
-            rank_col="srk",
-        )
-        .withColumn("srk", F.col("srk").cast("int"))
-        .drop("h")
+        emb.select(s.alias("s"))
+        .orderBy("s.h", "s.id")
+        .limit(n)
+        .agg(F.sort_array(F.collect_list("s")).alias("top"))
     )
 
 
-def seed_ivf_cells_frame(
-    emb: DataFrame, n_cells: int, seeds: DataFrame | None = None
-) -> DataFrame:
+def _ranked(top: DataFrame, rank_col: str) -> DataFrame:
+    """One row per element of :func:`_md5_first`'s array: id, v, rank."""
+    return top.select(F.posexplode("top").alias("pos", "s")).select(
+        F.col("s.id").alias("id"),
+        F.col("s.v").alias("v"),
+        (F.col("pos") + 1).cast("int").alias(rank_col),
+    )
+
+
+def ivf_seed_frame(emb: DataFrame, n_cells: int) -> DataFrame:
+    """The n_cells md5-picked seed vectors (seed_id, seed_emb, srk), srk
+    the 1-based rank in md5(vec_id) order — the cell id."""
+    return _ranked(_md5_first(emb, n_cells), "srk").select(
+        F.col("id").alias("seed_id"), F.col("v").alias("seed_emb"), "srk"
+    )
+
+
+def seed_ivf_cells_frame(emb: DataFrame, n_cells: int) -> DataFrame:
     """IVF assignment over an arbitrary (vec_id, embedding) frame: every
     vector scored against the n_cells seed quantizer; rk=1 is the cell,
-    rk<=n_probe the probe list. The seed table broadcasts. Pass a
-    prebuilt (ideally checkpoint-pinned) `seeds` frame to share one
-    quantizer materialization across consumers — ivfadc_topk reads the
-    seed table three ways (assignment, centroids, query residuals) and
-    each re-derivation otherwise costs its own broadcast job chain."""
+    rk<=n_probe the probe list. The seed table broadcasts."""
     from pyspark.sql import Window
 
-    if seeds is None:
-        seeds = ivf_seed_frame(emb, n_cells)
+    seeds = ivf_seed_frame(emb, n_cells)
     v = F.transform("embedding", lambda x: x.cast("double"))
     s = F.transform("seed_emb", lambda x: x.cast("double"))
     dot = F.aggregate(
@@ -1608,46 +1611,27 @@ def sm15(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pq_codebook(emb: DataFrame, salt: str = "", n_codes: int = 16) -> DataFrame:
-    """The 8-subspace x 16-codeword PQ codebook (j, k, cvec): md5-picked
-    seed-vector slices cast to double. 128 rows — always broadcast. Code
-    ids rank the 16 TakeOrdered survivors by broadcast triangular join
-    (rankops), not a row_number window — the plan carries no
-    single-partition WindowExec.
+    """The 8-subspace x n_codes PQ codebook (j, k, cvec): md5-picked
+    seed-vector slices cast to double, code id k the seed's 1-based rank
+    in md5(vec_id || salt) order (:func:`_md5_first`: no rank window, no
+    single-partition WindowExec). 8 x n_codes rows — always broadcast.
 
     salt: appended to the md5 seed key. REQUIRED when `emb` holds cell
     RESIDUALS (IVFADC): without it the PQ seed pick shares the IVF
     quantizer's md5 order, every PQ seed is its own cell centroid, all 16
     codewords are the zero vector, and the code table collapses to one
     code (found the hard way — pinned by test_ivfadc)."""
-    from pyconnect_spark.operators.rankops import rank_small_frame
-
-    top = emb.select(
-        F.col("vec_id").alias("sid"),
-        F.col("embedding").alias("semb"),
-        F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(salt))).alias("h"),
-    ).orderBy("h", "sid").limit(n_codes)
-    seeds = rank_small_frame(
-        top, F.struct(F.col("h").alias("kh"), F.col("sid").alias("ks")), rank_col="k"
-    ).withColumn("k", F.col("k").cast("int"))
+    seeds = _ranked(_md5_first(emb, n_codes, salt), "k")
     return seeds.select(
-        F.explode(F.sequence(F.lit(0), F.lit(7))).alias("j"),
-        "k",
-        F.col("semb").alias("semb"),
+        F.explode(F.sequence(F.lit(0), F.lit(7))).alias("j"), "k", "v"
     ).select(
         "j",
         "k",
-        F.transform(
-            F.slice("semb", F.col("j") * 8 + 1, 8), lambda x: x.cast("double")
-        ).alias("cvec"),
+        F.transform(F.slice("v", F.col("j") * 8 + 1, 8), lambda x: x.cast("double")).alias("cvec"),
     )
 
 
-def pq_best_codes(
-    emb: DataFrame,
-    salt: str = "",
-    n_codes: int = 16,
-    cb: DataFrame | None = None,
-) -> DataFrame:
+def pq_best_codes(emb: DataFrame, salt: str = "", n_codes: int = 16) -> DataFrame:
     """Per-(vec_id, subspace) PQ assignment (vec_id, j, k, dotp, cn2):
     argmin L2 to the codebook, ties to the lower code id. Shared by the
     encode audit (sm16) and the ADC search (sm17) so both consume the
@@ -1661,12 +1645,8 @@ def pq_best_codes(
     per-codeword explode, no (vec x code) shuffle, no rank window:
     encode cost stays map-only at any n_codes, which is what made
     PQ8x8 (256 codewords) affordable (the former crossJoin+window
-    encode was 16x the rows and a 4M-row sort at fixture scale).
-    Pass a prebuilt `cb` to share one codebook frame between the
-    encoder and an ADC LUT builder (ivfadc_topk does)."""
-    if cb is None:
-        cb = pq_codebook(emb, salt, n_codes)
-    cbarr = cb.groupBy("j").agg(
+    encode was 16x the rows and a 4M-row sort at fixture scale)."""
+    cbarr = pq_codebook(emb, salt, n_codes).groupBy("j").agg(
         F.array_sort(F.collect_list(F.struct("k", "cvec"))).alias("cws")
     )
     xv = emb.select(
@@ -1725,121 +1705,114 @@ def ivfadc_topk(
     reranks the top-`shortlist`. Deterministic end to end (md5 seed picks,
     sequential JVM folds) — the SQL oracle replays the full index.
     Reference parity: this is the repo's scale-tier ANN; the reference
-    engine has no ANN (single-process Kafka connector)."""
+    engine has no ANN (single-process Kafka connector).
+
+    Plan shape: the two small tables of the index, the coarse quantizer
+    (n_cells centroids) and the PQ codebook (n_codes residuals), are
+    each ONE array row (:func:`_md5_first`) that broadcasts, so every
+    per-vector step is a map-side array fold over the corpus rows: the
+    cell is the argmax of the centroid cosines, the residual subtracts
+    that centroid, and the 8 codes are per-subspace argmins over the
+    codebook. The queries' probe lists and LUTs form a third broadcast
+    (n_queries x n_probe rows), which the corpus meets on the cell id,
+    so the ADC distance is computed where the codes are: the only
+    shuffle gathers the probed candidates by query for the shortlist
+    and the exact rerank, two windows over one partitioning. No
+    checkpoint, no driver round-trip between the build and the search.
+    Ties and folds are those of seed_ivf_cells_frame / pq_best_codes:
+    cell by (cos9 desc, cell), code by (L2, k), each sum left to right.
+    The folds are SQL text: one parse each on the JVM, where the same
+    expressions built column by column cost thousands of py4j calls.
+    """
     from pyspark.sql import Window
 
-    # pin the seed quantizer ONCE: the assignment, the centroid table,
-    # and the query-residual build all read it, and each re-derivation
-    # is its own TakeOrdered + triangular-rank broadcast job chain (the
-    # query ran 28 Spark jobs before this sharing, ~17 s of pure
-    # per-job plan-compile latency at fixture scale)
-    seeds = ivf_seed_frame(emb, n_cells).localCheckpoint(eager=False)
-    # lazy checkpoint the full (vec_id, cell, rk) ranking: the rk=1 slice
-    # is the inverted file (read by the residual build AND the candidate
-    # probe) and the rk<=n_probe slice is the query probe list — one
-    # materialization serves all three consumers (this is the index a
-    # real deployment writes to disk once)
-    ranked = seed_ivf_cells_frame(emb, n_cells, seeds=seeds).localCheckpoint(
-        eager=False
+    def l2(a: str, b: str) -> str:
+        """Squared L2 of two 8-vectors summed left to right: the value of
+        aggregate(zip_with(a, b, (x-y)^2), 0D, +), unrolled (it runs
+        n_codes x 8 times per vector)."""
+        return " + ".join(f"({a}[{i}] - {b}[{i}]) * ({a}[{i}] - {b}[{i}])" for i in range(8))
+
+    def ranked_cells(x: str) -> str:
+        """(cos9, -cell) of x against every centroid: the max is x's
+        cell, descending order its probe list."""
+        nx = f"sqrt(aggregate({x}, 0D, (acc, v) -> acc + v * v))"
+        dot = f"aggregate(zip_with({x}, c.c, (a, b) -> a * b), 0D, (acc, v) -> acc + v)"
+        return f"transform(cents, (c, i) -> named_struct('cos9', round({dot} / ({nx} * c.n), 9), 'ncell', -(i + 1)))"
+
+    def resid(x: str, cell: str) -> str:
+        return f"zip_with({x}, element_at(cents, {cell}).c, (a, b) -> a - b)"
+
+    def subspaces(v: str) -> str:
+        return f"transform(sequence(0, 7), j -> slice({v}, j * 8 + 1, 8))"
+
+    dbl = "transform(embedding, v -> CAST(v AS DOUBLE))"
+    # the coarse quantizer: centroid of cell i+1 with its norm
+    quant = _md5_first(emb, n_cells).select(
+        F.expr(
+            "transform(transform(top, s -> transform(s.v, v -> CAST(v AS DOUBLE))), "
+            "c -> named_struct('c', c, 'n', sqrt(aggregate(c, 0D, (acc, v) -> acc + v * v))))"
+        ).alias("cents")
     )
-    cells = ranked.filter(F.col("rk") == 1).select("vec_id", "cell")
-    probes = ranked.filter(
-        (F.col("rk") <= n_probe) & (F.col("vec_id") < n_queries)
-    ).select(F.col("vec_id").alias("q_id"), "cell")
-    cents = seeds.select(
-        F.col("srk").alias("cell"),
-        F.transform("seed_emb", lambda x: x.cast("double")).alias("cent"),
+    # corpus side: cell and residual. spread() the scan: every fold below
+    # is per-row map work that would otherwise run single-threaded on a
+    # one-task fixture file (§2.5; no-op at scale).
+    vecs = (
+        spread(emb, "vec_id")
+        .crossJoin(F.broadcast(quant))
+        .select("vec_id", "embedding", "cents", F.expr(dbl).alias("x"))
+        .withColumn("cell", F.expr(f"-array_max({ranked_cells('x')}).ncell"))
+        .select("vec_id", "embedding", "cell", F.expr(resid("x", "cell")).alias("r"))
     )
-    # corpus residuals vs the OWN cell's centroid. spread() on the scan
-    # side: the joins below broadcast their small sides, so the residual
-    # frame inherits the streamed scan's partitioning — on a one-task
-    # fixture file the PQ encode's interpreted argmin folds downstream
-    # would otherwise run single-threaded (§2.5; no-op at scale).
-    resid = (
-        spread(emb, "vec_id").join(cells, "vec_id")
-        .join(F.broadcast(cents), "cell")
-        .select(
-            "vec_id",
-            "cell",
-            F.zip_with(
-                F.transform("embedding", lambda x: x.cast("double")),
-                F.col("cent"),
-                lambda a, b: a - b,
-            ).alias("embedding"),
-        )
-    )
-    # pin the residual frame too: the code assignment references it several
-    # times (codebook seed pick + encode) — this is the one-time index
-    # build pass that writes the code table in production
-    resid = resid.localCheckpoint(eager=False)
-    # ONE codebook frame shared by the encoder and the query-side LUT —
-    # the md5 seed pick + triangular rank runs once, not twice
-    cb = pq_codebook(
-        resid.select("vec_id", "embedding"), salt=":pq", n_codes=n_codes
-    ).localCheckpoint(eager=False)
-    # pin the code table as well: its argmin fold over n_codes codewords
-    # is a very large expression tree, and without lineage truncation
-    # every downstream job (ADC join, shortlist, rerank) re-compiles it
+    # the PQ codebook: n_codes residuals, first in md5(vec_id:pq) order
+    # (salted so the pick differs from the quantizer's), code k+1 = the
+    # k-th, stored per subspace: cws[j][k] is an 8-vector
+    book = _md5_first(
+        vecs.select("vec_id", F.col("r").alias("embedding")), n_codes, ":pq"
+    ).select(F.expr("transform(sequence(0, 7), j -> transform(top, s -> slice(s.v, j * 8 + 1, 8)))").alias("cws"))
+    # each vector's 8 codes: argmin L2 per subspace, ties to the lower code
     codes = (
-        pq_best_codes(
-            resid.select("vec_id", "embedding"),
-            salt=":pq",
-            n_codes=n_codes,
-            cb=cb,
-        )
-        .select("vec_id", "j", "k")
-        .localCheckpoint(eager=False)
+        f"transform({subspaces('r')}, (rj, j) -> "
+        f"array_min(transform(cws[j], (cw, i) -> named_struct('d', {l2('rj', 'cw')}, 'k', i + 1))).k)"
     )
-    cand = (
-        cells.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", "cell")
-        .distinct()
-    )
-    # per-(query, probed cell) residual, then the 8x16 ADC lookup table
-    qres = (
-        probes.join(
-            emb.filter(F.col("vec_id") < n_queries).select(
-                F.col("vec_id").alias("q_id"),
-                F.transform("embedding", lambda x: x.cast("double")).alias("qx"),
-            ),
-            "q_id",
+    coded = vecs.crossJoin(F.broadcast(book)).select("vec_id", "embedding", "cell", F.expr(codes).alias("codes"))
+    # query side: the n_probe best cells and, per (query, cell), the
+    # 8 x n_codes LUT of the query residual against that cell's centroid
+    luts = (
+        emb.filter(F.col("vec_id") < n_queries)
+        .crossJoin(F.broadcast(quant))
+        .crossJoin(F.broadcast(book))
+        .select(
+            F.col("vec_id").alias("q_id"),
+            F.col("embedding").alias("q_emb"),
+            "cents",
+            "cws",
+            F.expr(dbl).alias("x"),
         )
-        .join(F.broadcast(cents), "cell")
+        .select("*", F.expr(f"explode(slice(sort_array({ranked_cells('x')}, false), 1, {n_probe}))").alias("p"))
         .select(
             "q_id",
-            "cell",
-            F.zip_with("qx", "cent", lambda a, b: a - b).alias("qr"),
+            "q_emb",
+            (-F.col("p.ncell")).alias("cell"),
+            F.expr(
+                f"transform({subspaces(resid('x', '-p.ncell'))}, "
+                f"(qj, j) -> transform(cws[j], cw -> {l2('qj', 'cw')}))"
+            ).alias("lut"),
         )
     )
-    qj = F.slice("qr", F.col("j") * 8 + 1, 8)
-    d = F.aggregate(
-        F.zip_with(qj, F.col("cvec"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    lut = qres.crossJoin(F.broadcast(cb)).select("q_id", "cell", "j", "k", d.alias("d"))
-    adc = (
-        cand.join(codes, "vec_id")
-        .join(F.broadcast(lut), ["q_id", "cell", "j", "k"])
-        .groupBy("q_id", "vec_id")
-        .agg(F.round(F.sum("d"), 6).alias("adc_dist"))
-    )
+    adc = F.expr("round(aggregate(sequence(0, 7), 0D, (acc, j) -> acc + lut[j][codes[j] - 1]), 6)")
     w_adc = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
-    short = (
-        adc.withColumn("adc_rk", F.row_number().over(w_adc))
-        .filter(F.col("adc_rk") <= shortlist)
-        .select("q_id", "vec_id")
-    )
-    q_emb = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    sim = cosine(F.col("embedding"), F.col("q_emb"))
     w = Window.partitionBy("q_id").orderBy(F.desc("_raw"), "vec_id")
     return (
-        short.join(emb, "vec_id")
-        .join(F.broadcast(q_emb), "q_id")
-        .select("q_id", "vec_id", sim.alias("_raw"))
+        coded.join(F.broadcast(luts), "cell")
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .select(
+            "q_id",
+            "vec_id",
+            adc.alias("adc_dist"),
+            cosine(F.col("embedding"), F.col("q_emb")).alias("_raw"),
+        )
+        .withColumn("adc_rk", F.row_number().over(w_adc))
+        .filter(F.col("adc_rk") <= shortlist)
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .select(

@@ -2188,52 +2188,52 @@ def tx33(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _tx34_shard_sql(ctx: int) -> str:
-    """One context length's per-shard next-fit fold, replayed in DuckDB via
-    list_reduce (left fold, same order as the Spark aggregate)."""
-    return f"""
-      SELECT {ctx} AS ctx, shard,
-             list_reduce(
-               list_transform(list(least(n_tok, {ctx}) ORDER BY doc_id),
-                              n -> struct_pack(s := CAST(1 AS BIGINT),
-                                               f := CAST(n AS BIGINT))),
-               (a, x) -> CASE WHEN a.f + x.f <= {ctx}
-                              THEN struct_pack(s := a.s, f := a.f + x.f)
-                              ELSE struct_pack(s := a.s + CAST(1 AS BIGINT),
-                                               f := x.f) END) AS st,
-             CAST(SUM(least(n_tok, {ctx})) AS BIGINT) AS kept,
-             CAST(SUM(CASE WHEN n_tok > {ctx} THEN n_tok - {ctx} ELSE 0 END)
-                  AS BIGINT) AS truncated
-      FROM toks GROUP BY 2
-    """
-
-
 @REGISTRY.register(
     "tx34_packing_curve",
+    # The next-fit fold is a recursive CTE over each shard's doc_id-ordered
+    # rows, one step per document. (A list_reduce fold with a struct
+    # accumulator gave DuckDB 1.0.0 a wrong count for one shard when all
+    # shards were reduced in one query; tests/test_oracle_folds.py replays
+    # every fold in Python.)
     oracle=r"""
-    WITH toks AS (
+    WITH RECURSIVE toks AS (
       SELECT doc_id,
              CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT) % 16 AS shard,
              CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tok
       FROM documents
     ),
-    per_shard AS (
-      {SHARD_UNION}
+    ctxs AS (SELECT CAST(ctx AS BIGINT) AS ctx
+             FROM (VALUES (512), (1024), (2048), (4096)) v(ctx)),
+    seq AS (
+      SELECT shard, least(n_tok, ctx) AS n, ctx,
+             row_number() OVER (PARTITION BY ctx, shard ORDER BY doc_id) AS rn
+      FROM toks CROSS JOIN ctxs
+    ),
+    fold(ctx, shard, rn, s, f) AS (
+      SELECT ctx, shard, rn, CAST(1 AS BIGINT), n FROM seq WHERE rn = 1
+      UNION ALL
+      SELECT p.ctx, p.shard, q.rn,
+             CASE WHEN p.f + q.n <= p.ctx THEN p.s ELSE p.s + 1 END,
+             CASE WHEN p.f + q.n <= p.ctx THEN p.f + q.n ELSE q.n END
+      FROM fold p JOIN seq q
+        ON q.ctx = p.ctx AND q.shard = p.shard AND q.rn = p.rn + 1
     ),
     per_ctx AS (
-      SELECT ctx, CAST(SUM(st.s) AS BIGINT) AS n_seqs,
-             CAST(SUM(kept) AS BIGINT) AS packed_tokens,
-             CAST(SUM(truncated) AS BIGINT) AS truncated_tokens
-      FROM per_shard GROUP BY 1
+      SELECT ctx, CAST(SUM(s) AS BIGINT) AS n_seqs
+      FROM (SELECT ctx, shard, MAX(s) AS s FROM fold GROUP BY 1, 2)
+      GROUP BY 1
+    ),
+    tokens AS (
+      SELECT ctx, CAST(SUM(least(n_tok, ctx)) AS BIGINT) AS packed_tokens,
+             CAST(SUM(CASE WHEN n_tok > ctx THEN n_tok - ctx ELSE 0 END)
+                  AS BIGINT) AS truncated_tokens
+      FROM toks CROSS JOIN ctxs GROUP BY 1
     )
-    SELECT CAST(ctx AS BIGINT) AS ctx, n_seqs, packed_tokens, truncated_tokens,
+    SELECT ctx, n_seqs, packed_tokens, truncated_tokens,
            round(1.0 - CAST(packed_tokens AS DOUBLE) / (n_seqs * ctx), 6)
                AS pad_frac
-    FROM per_ctx
-    """.replace(
-        "{SHARD_UNION}",
-        "\n      UNION ALL ".join(_tx34_shard_sql(c) for c in (512, 1024, 2048, 4096)),
-    ),
+    FROM per_ctx JOIN tokens USING (ctx)
+    """,
     doc="Sequence-packing efficiency curve — the sizing study behind "
     "choosing a training context length: for ctx in 512/1k/2k/4k, pack "
     "whole documents next-fit (no doc splitting — the padding-relevant "
@@ -2246,8 +2246,8 @@ def _tx34_shard_sql(ctx: int) -> str:
     "by construction (next-fit depends on running fill), so docs pack "
     "in md5-shard streams (tx12's sharding): each shard's fold is one "
     "JVM aggregate over its (doc_id-ordered) sizes, shards run in "
-    "parallel, and the oracle replays the identical left fold via "
-    "DuckDB list_reduce. At 100 TB shard count scales with the corpus "
+    "parallel, and the oracle replays the identical left fold as a "
+    "recursive CTE. At 100 TB shard count scales with the corpus "
     "(16 here) — packing is embarrassingly parallel ACROSS shards by "
     "design, which is exactly how a real tokenizer-sharded pipeline "
     "packs.",

@@ -846,23 +846,31 @@ def test_dd05_lsh_tier_agrees_with_exact_tier(spark):
         assert scale == exact, (sf, scale ^ exact)
 
 
-def test_lsh_verify_shuffle_fallback_matches_broadcast_path(spark, monkeypatch):
-    """The verify tier's broadcasts are size-gated (round-11 verdict item
-    4): candidate sets over _VERIFY_BCAST_CAP take a shuffle-join form
-    instead of failing an over-cap broadcast. Force the cap to 0 so the
-    fallback branch executes, and pin that both branches produce the
-    identical edge set."""
+def test_lsh_verify_shuffle_join_matches_broadcast_join(spark):
+    """The verify tier's join strategy is the planner's: the per-doc
+    shingle-set frame broadcasts while its size estimate is under the
+    session threshold and shuffle-joins on doc_id beyond it. Turn
+    broadcasting off so the shuffle form executes, and pin that both
+    plans produce the identical edge set."""
     from pyconnect_spark.catalog import load_table
-    from pyconnect_spark.operators import dedup
+    from pyconnect_spark.operators.dedup import lsh_verified_edges
+    from pyconnect_spark.plans import has_broadcast_join
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    bcast = {(r.a, r.b) for r in dedup.lsh_verified_edges(docs, 0.8).collect()}
-    monkeypatch.setattr(dedup, "_VERIFY_BCAST_CAP", 0)
-    fallback = {
-        (r.a, r.b) for r in dedup.lsh_verified_edges(docs, 0.8).collect()
-    }
+    bcast_df = lsh_verified_edges(docs, 0.8)
+    assert has_broadcast_join(bcast_df)
+    bcast = {(r.a, r.b) for r in bcast_df.collect()}
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        shuffle_df = lsh_verified_edges(docs, 0.8)
+        assert not has_broadcast_join(shuffle_df)
+        shuffle = {(r.a, r.b) for r in shuffle_df.collect()}
+    finally:
+        spark.conf.set(key, old)
     assert bcast, "fixture must actually exercise the tier"
-    assert fallback == bcast, fallback ^ bcast
+    assert shuffle == bcast, shuffle ^ bcast
 
 
 def test_tx47_handles_sub_two_token_docs(spark, tmp_path):

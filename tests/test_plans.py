@@ -211,6 +211,29 @@ def test_tx11_build_launches_no_extra_jobs(spark):
     assert jobs_during("tx11_tfidf_keywords") <= baseline, "building tx11 must be lazy"
 
 
+def test_curation_queries_job_count_ceilings(spark):
+    # dd01 answers its three counts in one aggregate; dd05's connected
+    # components runs one shuffle + one checkpoint job per round with the
+    # convergence flag observed on the checkpoint job; sm18's index build
+    # and search is one plan over broadcast quantizer/codebook rows. Each
+    # extra Spark job costs its fixed scheduling and planning time, so the
+    # counts of builder + collect() are pinned as ceilings (same unique
+    # job-group counting as the tx11 laziness test). The previous forms
+    # launched 9, 37 and 29 jobs.
+    sc = spark.sparkContext
+    ceilings = {"dd01_exact_dedup": 4, "dd05_dedup_clusters": 10, "sm18_ivfadc": 10}
+    for name, ceiling in ceilings.items():
+        group = f"job-count-{name}"
+        sc.setJobGroup(group, f"job count: {name}")
+        try:
+            _Q[name](spark, SF).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs <= ceiling, f"{name} launched {jobs} Spark jobs (ceiling {ceiling})"
+
+
 def test_x34_q12_pruned_read_and_partial_agg(spark):
     # Q12 shape: the conditional counts must partial-aggregate map-side,
     # and each scan reads only its join/date/priority columns

@@ -1,61 +1,96 @@
-"""Per-query job/stage profile via the status tracker.
+"""Per-query Spark job/stage profile, run the way the curation benchmark
+runs its queries.
 
-For each named query: run builder+count once (warm session), then report
-how many Spark jobs it launched, how many stages, total task time vs wall
-time, and the slowest stages. Distinguishes "many serial tiny jobs /
-scheduling-bound" from "one big compute stage" — the decision the
-optimization guide's §1 empirical loop needs.
+Each named query is built and then ``collect()``-ed, in the order given,
+inside its own job group, twice: a cold pass (the first execution of its
+plans in the application, as a fresh batch job sees it) and then a warm
+pass. Operator caches are left in place between queries, as in one
+session's job. For each pass the tool reports the query's Spark jobs,
+stages that ran tasks, tasks and wall time, and at the end the total jobs
+per pass. Many jobs of one or two tasks and a wall far above the task time
+means the query is bound by per-job fixed cost, not by compute.
 
-Usage: python tools/jprof.py name [name ...]
+The session is the benchmark's own (``perfbench/harness.start_session``:
+cores = CPUs, shuffle partitions = CPUs, 2g heap, warm-up query), so the
+counts are the ones ``perfbench/run.py --workload llm_curation_batch``
+pays.
+
+Usage:
+    SPARK_GRAFT_SF_DIR=DIR python tools/jprof.py name [name ...]
+
+DIR holds ``documents.parquet``/``embeddings.parquet`` in the fixture
+schema. The curation benchmark's corpus for seed 7 is written by
+
+    python -c "import sys; sys.path.insert(0, 'perfbench'); import gen; \
+        gen.write_corpus(*gen.make_corpus(7, 600, 300), 'DIR')"
 """
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pyconnect_spark.registry import ALL
-from pyconnect_spark.session import get_spark
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def main() -> None:
-    names = sys.argv[1:]
-    spark = get_spark("jprof", cores=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+def profile(spark, builder, group: str) -> tuple[float, int, int, int]:
+    """Builds and collects one query inside job group ``group``; returns
+    (wall seconds, jobs, stages that ran tasks, tasks)."""
     sc = spark.sparkContext
-    builders = ALL.builders()
-    builders["b01_filter_project"](spark, SF).count()  # warm-up
-    from pyconnect_spark.cachereg import clear_operator_caches
-
     tracker = sc.statusTracker()
-    for name in names:
-        before_jobs = set(tracker.getJobIdsForGroup(None) or [])
-        sc.setJobGroup(f"jprof-{name}", name)
+    sc.setJobGroup(group, group)
+    try:
         t0 = time.perf_counter()
-        builders[name](spark, SF).count()
+        builder(spark, SF).collect()
         wall = time.perf_counter() - t0
-        jobs = tracker.getJobIdsForGroup(f"jprof-{name}") or []
-        stage_ids: set[int] = set()
-        for j in jobs:
-            ji = tracker.getJobInfo(j)
-            if ji:
-                stage_ids.update(ji.stageIds)
-        stages = []
-        for s in stage_ids:
-            si = tracker.getStageInfo(s)
-            if si and si.numCompletedTasks > 0:
-                stages.append((si.numTasks, s))
-        sc.setJobGroup(None, None)
-        print(
-            f"{name}: wall={wall:.2f}s jobs={len(jobs)} "
-            f"stages={len(stages)} tasks={sum(n for n, _ in stages)}",
-            flush=True,
-        )
-        clear_operator_caches()
-    spark.stop()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = tracker.getJobIdsForGroup(group) or []
+    stage_ids: set[int] = set()
+    for j in jobs:
+        ji = tracker.getJobInfo(j)
+        if ji:
+            stage_ids.update(ji.stageIds)
+    tasks = [
+        si.numTasks
+        for si in map(tracker.getStageInfo, stage_ids)
+        if si and si.numCompletedTasks > 0
+    ]
+    return wall, len(jobs), len(tasks), sum(tasks)
+
+
+def main() -> None:
+    import harness
+    from pyconnect_spark.registry import ALL
+
+    names = sys.argv[1:]
+    builders = ALL.builders()
+    work = tempfile.mkdtemp(prefix="jprof-")
+    os.makedirs(os.path.join(work, "tmp"))
+    # Python workers import the program from this checkout.
+    os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
+    try:
+        spark, _, _ = harness.start_session(work)
+        for pass_ in ("cold", "warm"):
+            total = 0
+            for name in names:
+                wall, jobs, stages, tasks = profile(spark, builders[name], f"jprof-{pass_}-{name}")
+                total += jobs
+                print(
+                    f"{pass_} {name}: wall={wall:.2f}s jobs={jobs} stages={stages} tasks={tasks}",
+                    flush=True,
+                )
+            print(f"{pass_} total jobs={total}", flush=True)
+    finally:
+        harness.stop_processes()
+        shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":
