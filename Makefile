@@ -1,4 +1,16 @@
-.PHONY: test test-oracle test-streaming test-kafka kafka-up kafka-down bench example lint window-audit preflight
+.PHONY: jvm test test-oracle test-streaming test-kafka kafka-up kafka-down bench example lint window-audit preflight
+
+# The fork-free `file:` filesystem jar that get_spark puts on the driver
+# classpath (pyconnect_spark/jvm). javac --release 17 against pyspark's own
+# hadoop-client-api; fixed entry timestamps so a rebuild is byte-stable.
+HADOOP_API = $(shell python -c "import glob, os, pyspark; print(*glob.glob(os.path.join(os.path.dirname(pyspark.__file__), 'jars', 'hadoop-client-api-*.jar')))")
+JVM_CLASSES = build/jvm
+jvm:
+	rm -rf $(JVM_CLASSES) && mkdir -p $(JVM_CLASSES)
+	javac --release 17 -Xlint:all -Werror -cp $(HADOOP_API) -d $(JVM_CLASSES) \
+	  $$(find pyconnect_spark/jvm/src -name '*.java' | sort)
+	jar --create --date=2026-01-01T00:00:00Z --file pyconnect_spark/jvm/pyconnect-fs.jar \
+	  -C $(JVM_CLASSES) .
 
 # Live-broker integration suites (skip cleanly without a broker).
 # Bring up Kafka + Schema Registry with `make kafka-up` (needs docker),

@@ -11,15 +11,36 @@ defaults set here:
 - Arrow enabled so every pandas-UDF operator moves columns, not pickled rows.
 - Session timezone pinned to UTC so timestamp semantics are deterministic
   and independent of the host (also required for oracle comparisons).
+- The ``file:`` scheme, for both the FileSystem and the FileContext API, is
+  ``pyconnect.fs.ForkFreeLocalFileSystem`` from the package's own jar
+  (``jvm/pyconnect-fs.jar``, put first on the driver classpath; build it with
+  ``make jvm``). pyspark ships no libhadoop, so Hadoop's local filesystem
+  forks ``chmod`` on every create and mkdirs and ``readlink`` on every link
+  lookup, about 150 processes per micro-batch of a stateful stream
+  (docs/SCALE.md §12). The jar's classes do the same with syscalls and keep
+  the checksum layer, the ``.crc`` files and the no-rename-onto-a-file rule
+  of Hive's ``ProxyLocalFileSystem`` that ``file:`` resolved to before.
+  Other schemes (HDFS, S3) are untouched.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 _DEFAULT_APP = "pyconnect-spark"
+_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "pyconnect-fs.jar")
+_LOCAL_FS = "pyconnect.fs.ForkFreeLocalFileSystem"
+_JAVA_OPTIONS = "-Dderby.system.home=/tmp/pyconnect-spark-derby"
+
+
+def _jvm_has_jar() -> bool:
+    """True when the driver JVM is yet to start (it will start with the jar)
+    or started with it; a JVM someone else launched keeps its filesystems."""
+    gateway = SparkContext._gateway
+    return gateway is None or _JAR in gateway.jvm.java.lang.System.getProperty("java.class.path")
 
 
 def get_spark(
@@ -35,6 +56,10 @@ def get_spark(
     ``cores`` defaults to ``$SPARK_GRAFT_CPUS`` or ``*``. On a real cluster
     the builder would instead carry master/deploy-mode from the environment;
     nothing else here is local-specific.
+
+    ``extra_conf`` entries override the defaults, except
+    ``spark.driver.extraClassPath`` and ``spark.driver.extraJavaOptions``,
+    which extend the package's own.
     """
     cores = cores or os.environ.get("SPARK_GRAFT_CPUS", "*")
     n_cores = os.cpu_count() or 8 if cores in ("*", None) else int(cores)
@@ -56,10 +81,9 @@ def get_spark(
         # parquet reader rejects outright; read as long and convert in the
         # catalog (stays in the vectorized reader, fully distributed).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Keep the derby metastore + warehouse (used only by bucketed-table
-        # features) out of the repo working tree.
+        # Keep the warehouse and (via _JAVA_OPTIONS) the derby metastore, used
+        # only by bucketed-table features, out of the repo working tree.
         .config("spark.sql.warehouse.dir", "/tmp/pyconnect-spark-warehouse")
-        .config("spark.driver.extraJavaOptions", "-Dderby.system.home=/tmp/pyconnect-spark-derby")
         # files.maxPartitionBytes default 128m is right for the 100 TB target;
         # leave it — small local files read as one task regardless.
         # Answer bare MIN/MAX/COUNT from parquet footers instead of scanning
@@ -73,9 +97,20 @@ def get_spark(
         # invocation on HDFS/S3.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    conf = dict(extra_conf or {})
+    # The caller's JVM settings extend the package's instead of replacing
+    # them; a later -D wins, so the caller's own properties still apply.
+    conf["spark.driver.extraClassPath"] = os.pathsep.join(
+        filter(None, [_JAR, conf.get("spark.driver.extraClassPath")])
+    )
+    conf["spark.driver.extraJavaOptions"] = " ".join(
+        filter(None, [_JAVA_OPTIONS, conf.get("spark.driver.extraJavaOptions")])
+    )
+    if _jvm_has_jar():
+        conf.setdefault("spark.hadoop.fs.file.impl", _LOCAL_FS)
+        conf.setdefault("spark.hadoop.fs.AbstractFileSystem.file.impl", f"{_LOCAL_FS}$Fs")
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
