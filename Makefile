@@ -1,15 +1,18 @@
 .PHONY: jvm test test-oracle test-streaming test-kafka kafka-up kafka-down bench example lint window-audit preflight
 
-# The fork-free `file:` filesystem jar that get_spark puts on the driver
-# classpath (pyconnect_spark/jvm). javac --release 17 against pyspark's own
-# hadoop-client-api; fixed entry timestamps so a rebuild is byte-stable.
-HADOOP_API = $(shell python -c "import glob, os, pyspark; print(*glob.glob(os.path.join(os.path.dirname(pyspark.__file__), 'jars', 'hadoop-client-api-*.jar')))")
+# The package jar that get_spark puts on the driver classpath
+# (pyconnect_spark/jvm): the fork-free `file:` filesystem and the Avro
+# codec UDFs. javac --release 17 against pyspark's own jars (jackson-databind
+# only resolves the annotations on Spark's DataType, which -Xlint would flag);
+# fixed entry timestamps so a rebuild is byte-stable.
+JVM_JARS = hadoop-client-api-*.jar avro-[0-9]*.jar spark-sql-api_*.jar scala-library-*.jar jackson-databind-*.jar
+JVM_CLASS_PATH = $(shell python -c "import glob, os, pyspark, sys; jars = os.path.join(os.path.dirname(pyspark.__file__), 'jars'); print(':'.join(glob.glob(os.path.join(jars, p))[0] for p in sys.argv[1:]))" $(foreach j,$(JVM_JARS),'$(j)'))
 JVM_CLASSES = build/jvm
 jvm:
 	rm -rf $(JVM_CLASSES) && mkdir -p $(JVM_CLASSES)
-	javac --release 17 -Xlint:all -Werror -cp $(HADOOP_API) -d $(JVM_CLASSES) \
+	javac --release 17 -Xlint:all -Werror -cp $(JVM_CLASS_PATH) -d $(JVM_CLASSES) \
 	  $$(find pyconnect_spark/jvm/src -name '*.java' | sort)
-	jar --create --date=2026-01-01T00:00:00Z --file pyconnect_spark/jvm/pyconnect-fs.jar \
+	jar --create --date=2026-01-01T00:00:00Z --file pyconnect_spark/jvm/pyconnect.jar \
 	  -C $(JVM_CLASSES) .
 
 # Live-broker integration suites (skip cleanly without a broker).

@@ -1,31 +1,43 @@
-"""Pure-Python Avro binary codec for the inferred-schema type surface.
+"""Avro binary codec for the inferred-schema type surface.
 
 The reference serializes every record through Confluent's Avro
-serializers; Spark's JVM `from_avro`/`to_avro` needs the spark-avro jar,
-which this image lacks — so the engine carries its own codec for the
-schema subset `functions/avro.py` can infer:
+serializers. Spark's own ``from_avro``/``to_avro`` need the spark-avro
+jar, which this image lacks, so the engine carries its own codec for the
+schema subset ``functions/avro.py`` can infer:
 
     null · boolean · int/long (zigzag varint) · float/double (LE IEEE) ·
     string/bytes (length-prefixed) · record · array · map ·
-    nullable unions ["null", T]
+    nullable unions ["null", T] / [T, "null"]
 
-Encoding follows the Avro 1.x binary spec exactly (verified against
-golden byte sequences in tests). `to_avro_py` / `from_avro_py` wrap the
-codec as Arrow-batched pandas UDFs so streams can produce/consume
-Confluent-framed Avro without the JVM package; when the jar is present,
-`streaming/kafka.py`'s JVM path is the fast road.
+Two implementations write the same bytes (Avro 1.x binary, one count
+block then 0 for arrays and maps):
+
+- ``to_avro_py`` / ``from_avro_py``, the column path streams use, run in
+  the JVM: the ``pyconnect.avro.Encode``/``Decode`` UDFs of the package
+  jar (``jvm/src``, ``make jvm``) over Apache Avro's ``BinaryEncoder`` and
+  ``BinaryDecoder``, called with the schema compiled once into a short
+  prefix text (``_compile``). No Python worker runs, so a batch pays no
+  per-task Python start-up and no per-record Python dispatch
+  (docs/SCALE.md §13). Confluent framing stays a SQL expression
+  (``wrap_confluent``/``unwrap_confluent``). The session must have been
+  started by ``get_spark``, which puts the jar on the classpath.
+- ``encode`` / ``decode`` run in-process for Python callers (the OCF
+  container in ``sources/avro_ocf.py``) and are the oracle the tests hold
+  the JVM codec to; golden byte sequences in the tests pin both.
 """
 
 from __future__ import annotations
 
+import hashlib
 import io
 import struct
-from typing import Any, Callable
+from typing import Any
 
-import pandas as pd
-
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
+
+from pyconnect_spark import session
+from pyconnect_spark.functions.avro import unwrap_confluent, wrap_confluent
 
 
 # ---------------------------------------------------------------------------
@@ -184,41 +196,101 @@ def decode(data: bytes | io.BytesIO, schema: Any) -> Any:
 
 
 # ---------------------------------------------------------------------------
-# column-level wrappers (Arrow-batched; Confluent framing optional)
+# column-level codec: JVM UDFs from the package jar
 # ---------------------------------------------------------------------------
+_KINDS = {
+    "null": "n", "boolean": "b", "int": "i", "long": "l",
+    "float": "f", "double": "d", "string": "s", "bytes": "y",
+}
+
+
+def _compile(schema: Any) -> str:
+    """The schema as the prefix text ``pyconnect.avro.Node`` parses: a kind
+    letter per node, ``u<null index>`` before a union's other branch, and
+    ``r<fields>;`` then ``<length>:<name>`` before each record field."""
+    schema = _unwrap(schema)
+    if isinstance(schema, list):
+        branches = [s for s in schema if s != "null"]
+        if len(schema) != 2 or len(branches) != 1:
+            raise ValueError(f"only nullable unions are supported: {schema!r}")
+        return f"u{schema.index('null')}{_compile(branches[0])}"
+    if isinstance(schema, str) and schema in _KINDS:
+        return _KINDS[schema]
+    if isinstance(schema, dict) and schema["type"] == "array":
+        return "a" + _compile(schema["items"])
+    if isinstance(schema, dict) and schema["type"] == "map":
+        return "m" + _compile(schema["values"])
+    if isinstance(schema, dict) and schema["type"] == "record":
+        fields = schema["fields"]
+        return f"r{len(fields)};" + "".join(
+            f"{len(f['name'])}:{f['name']}{_compile(f['type'])}" for f in fields
+        )
+    raise ValueError(f"unsupported Avro schema node: {schema!r}")
+
+
+def _has_map(schema: Any) -> bool:
+    schema = _unwrap(schema)
+    if isinstance(schema, list):
+        return any(_has_map(s) for s in schema)
+    if not isinstance(schema, dict):
+        return False
+    if schema["type"] == "record":
+        return any(_has_map(f["type"]) for f in schema["fields"])
+    return schema["type"] == "map" or _has_map(schema["items"])
+
+
+def _map_entries(col: Column, schema: Any) -> Column:
+    """``col`` with every map under ``schema`` turned into the array of its
+    entries. A JVM UDF receives a map as a Scala hash map, which loses the
+    entry order ``encode`` writes. Inferred schemas hold no maps, so their
+    columns pass through as they are."""
+    schema = _unwrap(schema)
+    if not _has_map(schema):
+        return col
+    if isinstance(schema, list):
+        return _map_entries(col, next(s for s in schema if s != "null"))
+    if schema["type"] == "map":
+        return F.transform(
+            F.map_entries(col),
+            lambda e: F.struct(e["key"], _map_entries(e["value"], schema["values"]).alias("value")),
+        )
+    if schema["type"] == "array":
+        return F.transform(col, lambda x: _map_entries(x, schema["items"]))
+    fields = [_map_entries(col[f["name"]], f["type"]).alias(f["name"]) for f in schema["fields"]]
+    return F.when(col.isNotNull(), F.struct(*fields))
+
+
+def _udf(name: str, java_class: str, return_type: str) -> str:
+    """``name``, registered as ``java_class`` in the active session unless it
+    already is (the name encodes the class and the return type)."""
+    if not session._jvm_has_jar():
+        raise RuntimeError(
+            "the Avro column codec runs in the package jar, which this session's JVM was "
+            "started without; start the session with pyconnect_spark.session.get_spark"
+        )
+    spark = SparkSession.active()
+    if not spark.catalog.functionExists(name):
+        spark.udf.registerJavaFunction(name, java_class, return_type)
+    return name
+
+
 def to_avro_py(col: Column, schema: dict, *, schema_id: int | None = None) -> Column:
-    """struct/primitive column → Avro binary (optionally Confluent-framed).
-    Rows arrive as pandas objects (dict-shaped for structs)."""
-    header = b"" if schema_id is None else bytes([0]) + int(schema_id).to_bytes(4, "big")
-
-    @F.pandas_udf("binary")
-    def enc(s: pd.Series) -> pd.Series:  # struct input still arrives as a DataFrame
-        # a struct column arrives as a pandas DataFrame (one column per
-        # field); primitives arrive as a Series
-        if isinstance(s, pd.DataFrame):
-            rows = s.to_dict("records")
-        else:
-            rows = s.tolist()
-        return pd.Series([header + encode(v, schema) for v in rows])
-
-    return enc(col)
+    """struct/primitive column → Avro binary, Confluent-framed when
+    ``schema_id`` is given; record fields are matched by name. NULL → NULL."""
+    text = _compile(schema)
+    udf = _udf("pyconnect_avro_encode", "pyconnect.avro.Encode", "binary")
+    payload = F.call_udf(udf, _map_entries(col, schema), F.lit(text))
+    return payload if schema_id is None else wrap_confluent(payload, schema_id)
 
 
 def from_avro_py(
     col: Column, schema: dict, spark_type: str, *, confluent_framed: bool = False
 ) -> Column:
     """Avro binary column → typed column (``spark_type`` is the DDL string
-    for the decoded shape, e.g. ``"struct<a:string,b:bigint>"``)."""
-
-    returns_struct = spark_type.strip().lower().startswith("struct")
-
-    @F.pandas_udf(spark_type)
-    def dec(s: pd.Series) -> pd.Series:  # runtime returns a DataFrame for structs
-        values = [
-            decode(bytes(b)[5:] if confluent_framed else bytes(b), schema) for b in s
-        ]
-        if returns_struct:
-            return pd.DataFrame(values)  # struct output = DataFrame of fields
-        return pd.Series(values)
-
-    return dec(col)
+    for the decoded shape, e.g. ``"struct<a:string,b:bigint>"``). NULL →
+    NULL; a truncated or malformed payload fails the task."""
+    text = _compile(schema)
+    digest = hashlib.sha1(spark_type.encode()).hexdigest()[:16]
+    udf = _udf(f"pyconnect_avro_decode_{digest}", "pyconnect.avro.Decode", spark_type)
+    payload = unwrap_confluent(col) if confluent_framed else col
+    return F.call_udf(udf, payload, F.lit(text))

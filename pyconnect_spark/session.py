@@ -13,10 +13,11 @@ defaults set here:
   and independent of the host (also required for oracle comparisons).
 - The ``file:`` scheme, for both the FileSystem and the FileContext API, is
   ``pyconnect.fs.ForkFreeLocalFileSystem`` from the package's own jar
-  (``jvm/pyconnect-fs.jar``, put first on the driver classpath; build it with
-  ``make jvm``). pyspark ships no libhadoop, so Hadoop's local filesystem
-  forks ``chmod`` on every create and mkdirs and ``readlink`` on every link
-  lookup, about 150 processes per micro-batch of a stateful stream
+  (``jvm/pyconnect.jar``, put first on the driver classpath; build it with
+  ``make jvm``; it also holds the Avro codec of ``functions/avro_codec.py``).
+  pyspark ships no libhadoop, so Hadoop's local filesystem forks ``chmod``
+  on every create and mkdirs and ``readlink`` on every link lookup, about
+  150 processes per micro-batch of a stateful stream
   (docs/SCALE.md §12). The jar's classes do the same with syscalls and keep
   the checksum layer, the ``.crc`` files and the no-rename-onto-a-file rule
   of Hive's ``ProxyLocalFileSystem`` that ``file:`` resolved to before.
@@ -31,7 +32,7 @@ from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 _DEFAULT_APP = "pyconnect-spark"
-_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "pyconnect-fs.jar")
+_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "pyconnect.jar")
 _LOCAL_FS = "pyconnect.fs.ForkFreeLocalFileSystem"
 _JAVA_OPTIONS = "-Dderby.system.home=/tmp/pyconnect-spark-derby"
 

@@ -7,6 +7,12 @@ sink. The spark-sql-kafka-0-10 jar is NOT in this image, so everything
 here is import-safe and fails with a clear message only when actually
 started; option-building is pure and unit-tested.
 
+``decode_confluent_avro``/``encode_confluent_avro`` use Spark's own
+``from_avro``/``to_avro``, which need the spark-avro jar; that jar is not
+in this image either. The codec that runs here is the package's:
+``functions/avro_codec.py``'s ``to_avro_py``/``from_avro_py``, JVM UDFs
+from the package jar with the same Confluent framing (no Python worker).
+
 At scale: the Kafka source maps one Spark task per topic-partition (the
 consumer-group parallelism of the reference, but elastic), and
 ``minPartitions`` can oversplit hot partitions.

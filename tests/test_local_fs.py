@@ -1,4 +1,5 @@
-"""The fork-free ``file:`` filesystem that ``get_spark`` installs.
+"""The fork-free ``file:`` filesystem that ``get_spark`` installs, and the
+package jar that holds it.
 
 - fork guard: a session runs streaming micro-batches and a batch write
   without forking ``chmod`` or ``readlink`` from the JVM;
@@ -7,7 +8,8 @@
   checksums, rename, link status, listing and checkpoint writes;
 - ``get_spark`` merges caller JVM settings into its own, and leaves the
   filesystem of a JVM launched without the package jar alone;
-- the committed jar is what ``make jvm`` builds from the source.
+- the committed jar is what ``make jvm`` builds from the source, the Avro
+  codec classes included.
 """
 
 from __future__ import annotations
@@ -284,9 +286,9 @@ def test_checkpoint_create_atomic_matches_stock(spark, tmp_path):
 
 
 def test_committed_jar_is_built_from_the_source(tmp_path):
-    """Recompiles the source as ``make jvm`` does and compares the classes
-    byte for byte, when a javac of the JDK release that built the jar is
-    on PATH (the jar's manifest names it)."""
+    """Recompiles the source as ``make jvm`` does (same class path and lint
+    flags) and compares the classes byte for byte, when a javac of the JDK
+    release that built the jar is on PATH (the jar's manifest names it)."""
     with zipfile.ZipFile(session._JAR) as jar:
         built_by = re.search(r"Created-By: (\d+)", jar.read("META-INF/MANIFEST.MF").decode()).group(1)
         committed = {n: jar.read(n) for n in jar.namelist() if n.endswith(".class")}
@@ -294,8 +296,16 @@ def test_committed_jar_is_built_from_the_source(tmp_path):
     version = subprocess.run([javac, "-version"], capture_output=True, text=True).stdout if javac else ""
     if not re.match(rf"javac {built_by}\b", version):
         pytest.skip(f"the jar was built by JDK {built_by}; javac on PATH: {version.strip() or 'none'}")
-    [api] = glob.glob(os.path.join(os.path.dirname(pyspark.__file__), "jars", "hadoop-client-api-*.jar"))
+    jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
+    class_path = [
+        glob.glob(os.path.join(jars, pattern))[0]
+        for pattern in ("hadoop-client-api-*.jar", "avro-[0-9]*.jar", "spark-sql-api_*.jar",
+                        "scala-library-*.jar", "jackson-databind-*.jar")
+    ]
     sources = sorted(glob.glob(os.path.join(_ROOT, "pyconnect_spark", "jvm", "src", "**", "*.java"), recursive=True))
-    subprocess.run([javac, "--release", "17", "-cp", api, "-d", str(tmp_path), *sources], check=True)
+    subprocess.run(
+        [javac, "--release", "17", "-Xlint:all", "-Werror", "-cp", os.pathsep.join(class_path), "-d", str(tmp_path), *sources],
+        check=True,
+    )
     rebuilt = {str(p.relative_to(tmp_path)): p.read_bytes() for p in tmp_path.rglob("*.class")}
     assert rebuilt == committed
