@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from pyconnect_spark.catalog import load_table
 from pyconnect_spark.session import get_spark
+from pyconnect_spark.streaming.epoch import write_epoch
 
 
 def main() -> None:
@@ -83,18 +84,14 @@ def main() -> None:
 
         def flush(batch, epoch_id):
             # accepted rows: epoch-keyed exactly-once promote
-            final = os.path.join(out_dir, f"epoch-{epoch_id:010d}.jsonl")
-            tmp_dir = final + ".tmp"
             flagged = batch.cache()
-            (
-                flagged.filter(F.col("_keep"))
-                .select(F.to_json(F.struct("doc_id", "fp", "lang", "n_chars")).alias("line"))
-                .write.mode("overwrite")
-                .text(tmp_dir)
+            write_epoch(
+                flagged.filter(F.col("_keep")).select(
+                    F.to_json(F.struct("doc_id", "fp", "lang", "n_chars")).alias("line")
+                ),
+                os.path.join(out_dir, f"epoch-{epoch_id:010d}.jsonl"),
+                "text",
             )
-            if os.path.isdir(final):
-                shutil.rmtree(final)
-            os.rename(tmp_dir, final)
             # rejected rows: dead-letter with the failure reason (never
             # silently dropped — auditable, replayable after a gate fix)
             (

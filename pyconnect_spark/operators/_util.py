@@ -22,13 +22,6 @@ FACTOR = "decimal(4,2)"  # discount / tax factors in [0, 2)
 # spread()'s partition-count probe memo: (applicationId, semanticHash) -> n
 _SPREAD_MEMO: dict[tuple[str, int], int] = {}
 
-# Measurement-only kill switches, flipped by tools/abtime.py's interleaved
-# A/B arms via direct module-attribute assignment. Deliberately NOT
-# environment variables: a stale env var in a driver environment would
-# silently change production job structure (round-11 advice).
-_AB_DISABLE_SPREAD = False
-_AB_DISABLE_SPREAD_ON = False
-
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
@@ -58,8 +51,6 @@ def spread(df: DataFrame, *keys: str | Column) -> DataFrame:
     hash repartitioning on a real key skips round-robin's
     sort-before-repartition pass and distributes evenly for unique keys.
     """
-    if _AB_DISABLE_SPREAD:  # set ONLY by tools/abtime.py (measurement A/B)
-        return df
     if df.isStreaming:  # streaming plans have no RDD to probe; no-op
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
@@ -113,8 +104,6 @@ def spread_on(df: DataFrame, base: DataFrame, *keys: str | Column) -> DataFrame:
     coalescing leaves alone, so the fold that follows keeps >= cores
     tasks. Nothing is tuned to either environment.
     """
-    if _AB_DISABLE_SPREAD_ON:  # set ONLY by tools/abtime.py
-        return df
     target = df.sparkSession.sparkContext.defaultParallelism
     if _probe_partitions(base) >= target:
         return df

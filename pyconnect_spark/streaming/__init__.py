@@ -7,6 +7,8 @@ Re-expression of the reference's connector semantics
 - `source`  — produce path: records → topic (R6-R11)
 - `sink`    — consume path: topic → durable sink with commit-after-flush
               at-least-once delivery (R12-R20)
+- `epoch`   — epoch-versioned directories: the exactly-once write rule
+              of EpochFileSink and the streaming state folds
 - `kafka`   — Kafka + Confluent-Avro wiring (gated on the spark-sql-kafka
               jar, absent in this image)
 - `windows` — event-time windowing/watermark/dedup helpers (S04-S06)

@@ -8,10 +8,9 @@ corpus: mergeability is algebraic, and because the bucket hashes are
 the md5-derived tx31 family, the equality is testable table-for-table.
 
 Additivity is also why replay is dangerous: re-merging a replayed
-batch double-counts. State versions are therefore keyed by the
-micro-batch epoch exactly like streaming/sketchstate.py (a replayed
-batch REBUILDS its epoch from the parent version) — the shared
-``_versions`` / ``_latest_state`` helpers implement that discipline.
+batch double-counts. The fold is streaming/epoch.py's: state versions
+are keyed by the micro-batch epoch, and a replayed batch REBUILDS its
+epoch from the parent version.
 
 The exchange per batch carries at most depth x width counters per map
 task (map-side combine over a fixed key domain); the state is a
@@ -22,13 +21,10 @@ never touch historical raw documents.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyconnect_spark.streaming.sketchstate import _latest_state, _versions
+from pyconnect_spark.streaming.epoch import fold_state, latest_state
 
 _DEPTH = 4
 _WIDTH = 1024
@@ -72,40 +68,14 @@ def cms_rollup_stream(
 ):
     """Start (availableNow) a stream folding each micro-batch's CMS into
     the persisted counter state. Returns the StreamingQuery."""
-
-    def update(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        fresh = cms_sketch(batch, text_col)
-        prev = _latest_state(spark, state_dir, below=epoch_id)
-        merged = (
-            fresh
-            if prev is None
-            else prev.unionByName(fresh)
-            .groupBy("r", "bucket")
-            .agg(F.sum("c").cast("long").alias("c"))
-        )
-        target = os.path.join(state_dir, f"v={epoch_id}")
-        if os.path.isdir(target):  # replay: rebuild from parent, never re-add
-            shutil.rmtree(target)
-        merged.write.parquet(target)
-        # Retain the parent version across the commit boundary (see
-        # sketchstate.py): the checkpoint commits this epoch only after
-        # foreachBatch returns, so a replay after a crash-at-this-point
-        # still needs the parent to rebuild from. Keep {epoch, parent}.
-        versions = _versions(state_dir)
-        parents = [v for v in versions if v < epoch_id]
-        keep = {epoch_id} | ({parents[-1]} if parents else set())
-        for v in versions:
-            if v not in keep:
-                shutil.rmtree(
-                    os.path.join(state_dir, f"v={v}"), ignore_errors=True
-                )
-
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return fold_state(
+        stream,
+        lambda batch: cms_sketch(batch, text_col),
+        lambda union: union.groupBy("r", "bucket").agg(
+            F.sum("c").cast("long").alias("c")
+        ),
+        state_dir=state_dir,
+        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -114,7 +84,7 @@ def query_heavy_hitters(
 ) -> DataFrame:
     """Estimate each candidate word's frequency from the counter state
     (min over the depth rows — the CMS read path; guaranteed >= truth)."""
-    state = _latest_state(spark, state_dir)
+    state = latest_state(spark, state_dir)
     if state is None:
         raise FileNotFoundError(f"no CMS state under {state_dir}")
     probes = candidates.select(

@@ -38,18 +38,15 @@ broadcast when batches are small), and compaction of the store is
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyconnect_spark.operators.dedup import band_keys, minhash_signatures
+from pyconnect_spark.streaming.epoch import glob_status
 
 
 def _store_df(spark: SparkSession, store_dir: str) -> DataFrame | None:
-    if os.path.isdir(store_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(store_dir)
-    ):
+    if glob_status(spark, f"{store_dir}/*.parquet"):
         return spark.read.parquet(store_dir)
     return None
 

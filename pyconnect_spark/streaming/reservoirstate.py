@@ -6,10 +6,10 @@ Same shape as sketchstate.py's KLL state (S30) with one strictly
 stronger property: bottom-k by a deterministic hash is IDEMPOTENT under
 replay — re-merging the same rows is a no-op because the merge distincts
 on (key, day, event_id) before re-ranking, so a duplicated micro-batch
-cannot displace anything. (KLL re-merge double-counts; S30 needs its
-epoch-rename discipline for correctness — here the epoch versioning is
-retained only for the read-write-same-path hygiene and parent-retention
-crash story, not to repair the algebra.)
+cannot displace anything. (KLL re-merge double-counts; S30 needs
+streaming/epoch.py's parent-rebuild rule for correctness — here the
+epoch versioning serves only the read-write-same-path hygiene and the
+parent-retention crash story, not to repair the algebra.)
 
 per micro-batch
   1. rank the batch per (key, day) by md5('kqs:' || event_id) and keep
@@ -20,8 +20,8 @@ per micro-batch
      k smallest hashes of a union are the k smallest of the per-part
      k-smallest, so a day receiving events across many batches
      converges to the same sample as one batch pass;
-  3. write as a new ``state_dir/v=<epoch>`` version; keep {epoch,
-     parent} across the commit boundary (sketchstate.py's discipline).
+  3. write as the epoch's ``state_dir/v=<epoch>`` version; keep {epoch,
+     parent} across the commit boundary (streaming/epoch.py's rule).
 
 Dashboard (`query_reservoir_quantiles`): per key, bottom-k over the
 union of daily samples, nearest-rank quantiles — ts40's arithmetic, so
@@ -36,13 +36,10 @@ quantiles.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyconnect_spark.streaming.sketchstate import _latest_state, _versions
+from pyconnect_spark.streaming.epoch import fold_state, latest_state
 
 _K = 512
 
@@ -83,10 +80,9 @@ def reservoir_rollup_stream(
 ):
     """Start (availableNow) a stream maintaining the daily reservoir
     state. Returns the StreamingQuery; awaitTermination() drains it."""
-
-    def update(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        fresh = _bottom_k(
+    return fold_state(
+        stream,
+        lambda batch: _bottom_k(
             batch.select(
                 F.col(key_col).alias("key"),
                 F.col(ts_col).cast("date").alias("day"),
@@ -97,38 +93,12 @@ def reservoir_rollup_stream(
             k,
             "key",
             "day",
-        )
-        prev = _latest_state(spark, state_dir, below=epoch_id)
-        merged = (
-            fresh
-            if prev is None
-            else _bottom_k(
-                prev.unionByName(fresh).dropDuplicates(
-                    ["key", "day", "event_id"]
-                ),
-                k,
-                "key",
-                "day",
-            )
-        )
-        target = os.path.join(state_dir, f"v={epoch_id}")
-        if os.path.isdir(target):  # replay: rebuild this epoch from parent
-            shutil.rmtree(target)
-        merged.write.parquet(target)
-        versions = _versions(state_dir)
-        parents = [v for v in versions if v < epoch_id]
-        keep = {epoch_id} | ({parents[-1]} if parents else set())
-        for v in versions:
-            if v not in keep:
-                shutil.rmtree(
-                    os.path.join(state_dir, f"v={v}"), ignore_errors=True
-                )
-
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        lambda union: _bottom_k(
+            union.dropDuplicates(["key", "day", "event_id"]), k, "key", "day"
+        ),
+        state_dir=state_dir,
+        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -143,7 +113,7 @@ def query_reservoir_quantiles(
     readout equals the batch query on the same data bit-for-bit."""
     from pyspark.sql import Window
 
-    state = _latest_state(spark, state_dir)
+    state = latest_state(spark, state_dir)
     if state is None:
         raise FileNotFoundError(f"no reservoir state under {state_dir}")
     n_days = state.groupBy("key").agg(

@@ -16,6 +16,10 @@ writes the batch's offsets to the checkpoint commit log only after
 inside ``on_flush`` fails the batch, the offset is not committed, and the
 restarted query replays the same batch — guarantee (3).
 
+``EpochFileSink`` upgrades (3) to exactly-once: its flush writes the
+batch as an epoch-named directory by streaming/epoch.py's rule, so a
+replay rewrites the same directory instead of appending twice.
+
 Message-type dispatch (R13: STANDARD/NO_MESSAGE/ERROR/EOF) collapses:
 Spark sources surface only data rows; errors fail the query
 (→ status machine); EOF = ``trigger(availableNow=True)``.
@@ -25,7 +29,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 from typing import Callable, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -35,6 +38,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from pyconnect_spark.config import SinkConfig
 from pyconnect_spark.streaming.core import BaseConnector
+from pyconnect_spark.streaming.epoch import write_epoch
 from pyconnect_spark.streaming.source import RECORD_SCHEMA
 
 
@@ -102,7 +106,7 @@ class SparkSink(BaseConnector):
         # filesystem client, so the user-facing knob here is flush retry:
         # a transient on_flush failure (throttled object store, connection
         # blip) retries in place before the batch is declared failed.
-        retries = getattr(self.config, "sink_flush_retry_count", 0) or 0
+        retries = self.config.sink_flush_retry_count
         attempt = 0
         while True:
             try:
@@ -139,41 +143,27 @@ class FileSink(SparkSink):
 
 
 class EpochFileSink(SparkSink):
-    """Exactly-once JSON-lines sink: each micro-batch writes an
-    epoch-keyed part file via atomic tmp+rename. A replayed batch (crash
-    after flush, before the checkpoint commit) rewrites the *same* file,
-    so downstream readers of the directory observe each record exactly
-    once — upgrading the reference's at-least-once contract where the
-    sink target supports idempotent writes."""
+    """Exactly-once JSON-lines sink: each micro-batch becomes the
+    directory ``out_dir/epoch-%010d.jsonl`` of executor-written part
+    files, promoted by streaming/epoch.py's tmp-write + rename. A replayed
+    batch (crash after flush, before the checkpoint commit) rewrites and
+    re-promotes the *same* directory, so downstream readers observe each
+    record exactly once — upgrading the reference's at-least-once
+    contract where the sink target supports idempotent writes."""
 
     def __init__(self, *args, out_dir: str, **kw):
         super().__init__(*args, **kw)
         self.out_dir = out_dir
 
     def on_flush(self, batch: DataFrame, epoch_id: int) -> None:
-        """Executor-side write, driver-side metadata rename.
-
-        The batch's rows are written BY THE EXECUTORS as JSON-lines part
-        files into ``epoch-N.jsonl.tmp`` (no ``collect()`` — at scale the
-        driver never sees the data), then the driver promotes the complete
-        directory to ``epoch-N.jsonl`` — an O(1) metadata operation. A
-        replayed epoch overwrites the tmp dir and re-promotes the same
-        name, so readers observe each record exactly once. On HDFS/S3 the
-        promote step is a FileSystem.rename / committer call; same shape.
-        """
-        os.makedirs(self.out_dir, exist_ok=True)
-        final = os.path.join(self.out_dir, f"epoch-{epoch_id:010d}.jsonl")
-        tmp = final + ".tmp"
-        (
-            batch.select(
-                F.to_json(F.struct(F.col("key"), F.col("value"))).alias("line")
-            )
-            .write.mode("overwrite")
-            .text(tmp)
+        """The executors write the rows (the driver never sees them); the
+        driver's promote is a delete and a rename on ``out_dir``'s
+        FileSystem."""
+        write_epoch(
+            batch.select(F.to_json(F.struct("key", "value")).alias("line")),
+            f"{self.out_dir}/epoch-{epoch_id:010d}.jsonl",
+            "text",
         )
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)  # idempotent under replay
 
 
 class RecordCallbackSink(SparkSink):

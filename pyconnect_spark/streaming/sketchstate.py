@@ -12,17 +12,15 @@ per micro-batch
      keyed on (key, day), so a day receiving events across many
      batches converges to the same sketch as a single batch pass
      (mergeability is exactly the property that makes this sound);
-  3. write the merged state as a NEW VERSION directory
-     ``state_dir/v=<epoch>`` — never overwrite the version being
-     read (the classic read-write-same-path Spark trap); readers
-     take the max epoch, old epochs are pruned after the write.
+  3. write the merged state as the epoch's version ``state_dir/v=<epoch>``
+     by streaming/epoch.py's rule: never overwrite the version being
+     read (the classic read-write-same-path Spark trap), keep {epoch,
+     parent}, prune the rest.
 
-Delivery: at-least-once with idempotent convergence in the useful
-direction — KLL merge is NOT idempotent under replay (re-merging the
-same batch double-counts its points), so the state version directory
-is keyed by the micro-batch epoch: a replayed batch REWRITES its own
-epoch from its parent (epoch-1) rather than merging twice, which is
-the same epoch-rename discipline as EpochFileSink (streaming/sink.py).
+KLL merge is NOT idempotent under replay (re-merging the same batch
+double-counts its points), so a replayed batch REWRITES its own epoch
+from its parent rather than merging twice — epoch.py's parent-rebuild
+rule, shared with the other state folds and EpochFileSink.
 
 Dashboard queries (``query_quantiles``) read the latest state version
 only: |keys x days| rows of sketch bytes, never the fact stream.
@@ -34,39 +32,10 @@ the pipeline ever re-reads historical raw events.
 
 from __future__ import annotations
 
-import os
-import re
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_VERSION_RE = re.compile(r"^v=(\d+)$")
-
-
-def _versions(state_dir: str) -> list[int]:
-    if not os.path.isdir(state_dir):
-        return []
-    out = []
-    for name in os.listdir(state_dir):
-        m = _VERSION_RE.match(name)
-        if m and os.path.isdir(os.path.join(state_dir, name)):
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
-def _latest_state(
-    spark: SparkSession, state_dir: str, *, below: int | None = None
-) -> DataFrame | None:
-    """Newest persisted state, optionally restricted to epochs < below
-    (the replay case: a re-run batch must build on its PARENT state,
-    not on its own previous half-written attempt)."""
-    versions = _versions(state_dir)
-    if below is not None:
-        versions = [v for v in versions if v < below]
-    if not versions:
-        return None
-    return spark.read.parquet(os.path.join(state_dir, f"v={versions[-1]}"))
+from pyconnect_spark.streaming.epoch import fold_state, latest_state
 
 
 def sketch_rollup_stream(
@@ -84,46 +53,17 @@ def sketch_rollup_stream(
     ``stream`` is a streaming DataFrame carrying key/timestamp/value
     columns. Returns the StreamingQuery; awaitTermination() drains it.
     """
-
-    def update(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        fresh = batch.groupBy(
+    return fold_state(
+        stream,
+        lambda batch: batch.groupBy(
             F.col(key_col).alias("key"),
             F.col(ts_col).cast("date").alias("day"),
-        ).agg(F.kll_sketch_agg_double(value_col, F.lit(k)).alias("sk"))
-        prev = _latest_state(spark, state_dir, below=epoch_id)
-        merged = (
-            fresh
-            if prev is None
-            else prev.unionByName(fresh)
-            .groupBy("key", "day")
-            .agg(F.kll_merge_agg_double("sk").alias("sk"))
-        )
-        target = os.path.join(state_dir, f"v={epoch_id}")
-        if os.path.isdir(target):  # replay: rebuild this epoch from parent
-            shutil.rmtree(target)
-        merged.write.parquet(target)
-        # Prune history but RETAIN the parent version across the commit
-        # boundary: the streaming checkpoint commits this epoch only
-        # after foreachBatch returns, so deleting the parent here would
-        # leave a crash-then-replay of this epoch with no state to
-        # rebuild from (merged would silently become fresh-only). Keep
-        # {epoch, its parent}; anything older is safe to drop because a
-        # replay never reaches further back than one epoch.
-        versions = _versions(state_dir)
-        parents = [v for v in versions if v < epoch_id]
-        keep = {epoch_id} | ({parents[-1]} if parents else set())
-        for v in versions:
-            if v not in keep:
-                shutil.rmtree(
-                    os.path.join(state_dir, f"v={v}"), ignore_errors=True
-                )
-
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ).agg(F.kll_sketch_agg_double(value_col, F.lit(k)).alias("sk")),
+        lambda union: union.groupBy("key", "day").agg(
+            F.kll_merge_agg_double("sk").alias("sk")
+        ),
+        state_dir=state_dir,
+        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -134,7 +74,7 @@ def query_quantiles(
 ) -> DataFrame:
     """The dashboard query: merge each key's daily sketches and emit
     quantile estimates — |keys| rows, fact stream never touched."""
-    state = _latest_state(spark, state_dir)
+    state = latest_state(spark, state_dir)
     if state is None:
         raise FileNotFoundError(f"no sketch state under {state_dir}")
     return state.groupBy("key").agg(

@@ -12,11 +12,11 @@ batch tx10 combiner already relies on; at 100 TB the state is a
 word-keyed parquet table of a few hundred million rows — large but
 fact-table-shaped, partitioned by hash(word), merged with a word-keyed
 sum that shuffles only (word, count) pairs. When even that is too much,
-tx31's CMS (S30-style epoch state) is the documented lossy tier; this
+tx31's CMS (cmsstate.py) is the documented lossy tier; this
 operator is the exact tier a tokenizer trainer actually wants.
 
-per micro-batch (sketchstate.py's epoch discipline — sum-merge is NOT
-idempotent under replay, so the parent-rebuild rule does the repair):
+per micro-batch (streaming/epoch.py's fold — sum-merge is NOT
+idempotent under replay, so its parent-rebuild rule does the repair):
   1. explode the batch's documents into words (tx10's tokenization,
      verbatim), count per word — the batch's own vocab table;
   2. merge with the newest persisted state STRICTLY BELOW this epoch
@@ -32,13 +32,10 @@ full drain this EQUALS batch tx10 bit-for-bit
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyconnect_spark.streaming.sketchstate import _latest_state, _versions
+from pyconnect_spark.streaming.epoch import fold_state, latest_state
 
 
 def vocab_rollup_stream(
@@ -53,44 +50,18 @@ def vocab_rollup_stream(
     ``stream`` carries a document text column. Returns the
     StreamingQuery; awaitTermination() drains it.
     """
-
-    def update(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        fresh = (
-            batch.select(
-                F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias(
-                    "word"
-                )
-            )
-            .groupBy("word")
-            .agg(F.count("*").cast("long").alias("n"))
+    return fold_state(
+        stream,
+        lambda batch: batch.select(
+            F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word")
         )
-        prev = _latest_state(spark, state_dir, below=epoch_id)
-        merged = (
-            fresh
-            if prev is None
-            else prev.unionByName(fresh)
-            .groupBy("word")
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
-        target = os.path.join(state_dir, f"v={epoch_id}")
-        if os.path.isdir(target):  # replay: rebuild this epoch from parent
-            shutil.rmtree(target)
-        merged.write.parquet(target)
-        versions = _versions(state_dir)
-        parents = [v for v in versions if v < epoch_id]
-        keep = {epoch_id} | ({parents[-1]} if parents else set())
-        for v in versions:
-            if v not in keep:
-                shutil.rmtree(
-                    os.path.join(state_dir, f"v={v}"), ignore_errors=True
-                )
-
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .groupBy("word")
+        .agg(F.count("*").cast("long").alias("n")),
+        lambda union: union.groupBy("word").agg(
+            F.sum("n").cast("long").alias("n")
+        ),
+        state_dir=state_dir,
+        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -99,7 +70,7 @@ def query_vocab_topk(
 ) -> DataFrame:
     """Dashboard readout: tx10's top-k by (count DESC, word) over the
     newest persisted state."""
-    state = _latest_state(spark, state_dir)
+    state = latest_state(spark, state_dir)
     if state is None:
         raise FileNotFoundError(f"no vocab state under {state_dir}")
     return state.orderBy(F.desc("n"), "word").limit(k)

@@ -471,18 +471,18 @@ def test_s10_python_datasource_offsets(spark, tmp_path):
     assert sorted(second) == sorted((f"key_{i}", f"value_{i}") for i in range(20, 30))
 
 
-def test_s11_epoch_file_sink_exactly_once(spark, tmp_path):
-    """EpochFileSink: a replayed epoch rewrites the same part file, so the
-    directory never contains duplicates (exactly-once observable effect)."""
+def _epoch_sink_replays_exactly_once(spark, tmp, out_dir):
+    """Crash an EpochFileSink after its write, before the commit, then
+    restart it; the epochs under ``out_dir`` (a path or a ``file://`` URI
+    of ``tmp/epochs``) must hold each record once."""
     from pyconnect_spark.streaming.sink import EpochFileSink
 
-    tmp = str(tmp_path)
     topic = os.path.join(tmp, "topic-s11")
     RecordsSource(
         spark, _source_cfg(tmp, topic), RECORDS, staging_dir=os.path.join(tmp, "in")
     ).run()
 
-    out_dir = os.path.join(tmp, "epochs")
+    local_out = os.path.join(tmp, "epochs")
     cfg = _sink_cfg(tmp, topic, "s11")
 
     class CrashAfterWrite(EpochFileSink):
@@ -493,7 +493,7 @@ def test_s11_epoch_file_sink_exactly_once(spark, tmp_path):
     crashing = CrashAfterWrite(spark, cfg, out_dir=out_dir)
     with pytest.raises(PyConnectError):
         crashing.run()
-    files_after_crash = sorted(os.listdir(out_dir))
+    files_after_crash = sorted(os.listdir(local_out))
     assert files_after_crash  # the write did land
 
     def read_epoch_dir(d):
@@ -506,17 +506,29 @@ def test_s11_epoch_file_sink_exactly_once(spark, tmp_path):
 
     # restart replays the SAME epoch; directory re-promoted, not duplicated
     EpochFileSink(spark, cfg, out_dir=out_dir).run()
-    finals = sorted(f for f in os.listdir(out_dir) if f.endswith(".jsonl"))
-    assert all(os.path.isdir(os.path.join(out_dir, f)) for f in finals)
+    finals = sorted(f for f in os.listdir(local_out) if f.endswith(".jsonl"))
+    assert all(os.path.isdir(os.path.join(local_out, f)) for f in finals)
     all_rows = []
     for fn in finals:
-        all_rows += read_epoch_dir(os.path.join(out_dir, fn))
+        all_rows += read_epoch_dir(os.path.join(local_out, fn))
     assert sorted(all_rows) == sorted(RECORDS)  # exactly once, no dups
     # the flush path must never funnel data through the driver
     import inspect
 
     src = inspect.getsource(EpochFileSink.on_flush)
     assert ".collect()" not in src
+
+
+def test_s11_epoch_file_sink_exactly_once(spark, tmp_path):
+    """EpochFileSink: a replayed epoch rewrites the same part file, so the
+    directory never contains duplicates (exactly-once observable effect)."""
+    _epoch_sink_replays_exactly_once(spark, str(tmp_path), str(tmp_path / "epochs"))
+
+
+def test_s11b_epoch_file_sink_over_a_file_uri(spark, tmp_path):
+    """S11 with ``out_dir`` given as a ``file://`` URI: the promote goes
+    through the URI's Hadoop FileSystem, not through Python's ``os``."""
+    _epoch_sink_replays_exactly_once(spark, str(tmp_path), (tmp_path / "epochs").as_uri())
 
 
 def test_s17_record_callback_shim(spark, tmp_path):
@@ -1460,7 +1472,7 @@ def test_s28_streaming_cdc_apply_via_merge_upsert(spark, tmp_path):
     assert not glob.glob(str(tmp_path / "cdc-target.staging-merge"))
 
 
-def test_s29_streaming_neardup_filter(spark, tmp_path):
+def _neardup_drops_later_copies(spark, tmp_path, store):
     """Streaming MinHash-LSH near-dup filter (streaming/neardup.py): the
     first drain accepts all distinct docs and claims their band
     buckets; a later drain drops exact AND lightly-edited copies of
@@ -1482,7 +1494,6 @@ def test_s29_streaming_neardup_filter(spark, tmp_path):
     ]
     schema = "doc_id long, text string"
     incoming = str(tmp_path / "incoming")
-    store = str(tmp_path / "bucket-store")
     accepted = str(tmp_path / "accepted")
     ckpt = str(tmp_path / "ckpt")
     spark.createDataFrame(batch1, schema).coalesce(1).write.mode("append").parquet(incoming)
@@ -1505,6 +1516,16 @@ def test_s29_streaming_neardup_filter(spark, tmp_path):
     assert 11 not in got, "exact copy must be dropped"
     assert 12 not in got, "near copy (1 word edited in 200) must be dropped"
     assert got == {1, 2, 13}
+
+
+def test_s29_streaming_neardup_filter(spark, tmp_path):
+    _neardup_drops_later_copies(spark, tmp_path, str(tmp_path / "bucket-store"))
+
+
+def test_s29b_neardup_store_under_a_file_uri(spark, tmp_path):
+    """S29 with the bucket store given as a ``file://`` URI: the stored
+    buckets must be found, or every later near copy passes."""
+    _neardup_drops_later_copies(spark, tmp_path, (tmp_path / "bucket-store").as_uri())
 
 
 def test_s30_streaming_sketch_state_dashboard(spark, tmp_path):
@@ -1580,14 +1601,14 @@ def test_s30_streaming_sketch_state_dashboard(spark, tmp_path):
     assert state_rows.count() == 4
 
     # Replay resilience: a replayed newest epoch reads
-    # _latest_state(below=newest) — that MUST be the retained parent
+    # latest_state(below=newest) — that MUST be the retained parent
     # (the 3-day state from drain 1), not None. Before the fix the
     # parent was pruned inside the same foreachBatch call, so a crash
     # between prune and checkpoint-commit lost all accumulated state.
-    from pyconnect_spark.streaming.sketchstate import _latest_state
+    from pyconnect_spark.streaming.epoch import latest_state
 
     newest_epoch = int(newest.split("=")[1])
-    parent = _latest_state(spark, state, below=newest_epoch)
+    parent = latest_state(spark, state, below=newest_epoch)
     assert parent is not None, "parent version must survive until commit"
     assert parent.count() == 3  # drain-1 state: days 1..3
 
@@ -2040,7 +2061,7 @@ def test_s36_streaming_vocab_equals_batch(spark, tmp_path):
     )
     # simulate the crash-replay: foreachBatch re-invoked with the same
     # epoch id over the same (second) chunk
-    from pyconnect_spark.streaming.sketchstate import _latest_state
+    from pyconnect_spark.streaming.epoch import latest_state
 
     chunk2 = docs.where(F.col("doc_id") % 2 == 1)
     fresh = (
@@ -2050,7 +2071,7 @@ def test_s36_streaming_vocab_equals_batch(spark, tmp_path):
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("n"))
     )
-    prev = _latest_state(spark, state, below=newest)
+    prev = latest_state(spark, state, below=newest)
     merged = (
         prev.unionByName(fresh)
         .groupBy("word")
