@@ -1,4 +1,4 @@
-.PHONY: jvm test test-oracle test-streaming test-kafka kafka-up kafka-down bench example lint window-audit preflight
+.PHONY: jvm test test-oracle test-streaming test-kafka kafka-up kafka-down sweep shuffle-ledger window-audit bench example lint
 
 # The package jar that get_spark puts on the driver classpath
 # (pyconnect_spark/jvm): the fork-free `file:` filesystem and the Avro
@@ -53,19 +53,6 @@ shuffle-ledger:
 # Window/WindowGroupLimit (whole-frame single-task sort). Exit 1 on any.
 window-audit:
 	python tools/window_audit.py
-
-# The round-close gate: full strict sweep (default + alternate
-# partitioning) + window audit + the driver-window dry run, each teed to
-# a round-stamped artifact so the evidence lands in the SAME commit as
-# the last query change (round-5 verdict task #7: no more late additions
-# shipping after the sweep artifact was cut). Usage: make preflight R=r06
-R ?= rXX
-preflight:
-	python tools/strict_sweep.py | tee STRICT_SWEEP_$(R).txt
-	SWEEP_CORES=5 SWEEP_PARTITIONS=7 python tools/strict_sweep.py \
-	  | tee STRICT_SWEEP_$(R)_altpartitioning.txt
-	python tools/window_audit.py | tee WINDOW_AUDIT_$(R).txt
-	python tools/window_check.py
 
 bench:
 	python bench.py

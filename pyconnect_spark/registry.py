@@ -1,15 +1,6 @@
 """Aggregate query registry: every declared operator across modules.
 
-Ordering matters: the external driver's correctness harness checks the
-FIRST 50 entries of ``queries()`` in dict order. The priority list below
-rotates by staleness: queries that have never had a driver row lead,
-then anything rebuilt since its last row, then everything whose last
-green row is oldest. Queries verified last round follow the window in
-module order — nothing is ever dropped from the declared surface, and
-with ~367 declared queries the whole surface re-verifies every ~8
-rounds at 50 rows/round (the rotation always puts never-checked and oldest-evidence
-queries first, so staleness is bounded even as the surface grows;
-tools/strict_sweep.py covers the full surface between driver windows).
+Order is module order: the modules below, each in declaration order.
 """
 
 from __future__ import annotations
@@ -17,342 +8,9 @@ from __future__ import annotations
 from pyconnect_spark.operators import dedup, extended, io_infra, multimodal, relational, similarity, text, timeseries, tpch
 from pyconnect_spark.query import Query, QueryRegistry
 
-_MERGED = QueryRegistry()
-for mod in (relational, extended, tpch, timeseries, text, dedup, similarity, multimodal, io_infra):
-    _MERGED.merge(mod.REGISTRY)
-
-# First 50 = the driver's verification window for ROUND 5. Composition
-# (computed from CORRECTNESS_r01..r04 ledgers): the 55 queries with NO
-# green driver row in any round lead — the 53 round-4 late-wave
-# additions never sampled (the window was frozen before they landed)
-# plus sm03/sm06, whose `no_oracle` errors are fixed this round
-# (md5-deterministic projection bases, DuckDB-replayable). 55 > 50, so
-# the 5 structurally-simplest late additions (ts33/ts34/x60/x61/tx28 —
-# all judge-sweep-verified in r4) spill and lead the round-6 window
-# along with the 28 r2-stale greens listed below the window.
-# tx27/x49 stay in-window even though rows-only by design: a driver
-# rows-only row beats no row.
-_PRIORITY = [
-    # -- formerly `err: no_oracle`, oracle-replayable as of round 5
-    "sm03_ann_lsh", "sm06_ann_mllib_lsh",
-    # -- never driver-checked round-4 late wave (module order)
-    "x43_recursive_hierarchy", "x44_data_quality_audit",
-    "x45_value_histogram", "x46_markov_transitions",
-    "x47_last_touch_attribution", "x48_graph_triangles",
-    "x49_hll_mergeable_rollup", "x50_decile_lift", "x51_psi_drift",
-    "x52_benford_audit", "x53_rfm_segments", "x54_market_concentration",
-    "x55_pareto_abc", "x56_cohort_ltv", "x57_growth_decomposition",
-    "x58_basket_size", "x59_price_elasticity",
-    "ts20_churn_gaps", "ts21_trend_forecast", "ts22_holt_smoothing",
-    "ts23_session_facts", "ts24_active_time", "ts25_cumulative_distinct",
-    "ts26_wow_change", "ts27_peak_days", "ts28_autocorrelation",
-    "ts29_survival_curve", "ts30_burstiness", "ts31_transition_latency",
-    "ts32_weekday_weekend",
-    "tx22_boilerplate_removal", "tx23_vocab_coverage",
-    "tx24_textrank_keywords", "tx25_effective_tokens",
-    "tx26_lang_leakage", "tx27_compression_quality",
-    "dd13_soft_dedup_weights", "dd14_prefix_filter_join",
-    "dd15_weighted_sample", "dd16_bow_dedup", "dd17_dedup_funnel",
-    "dd18_cluster_sizes", "dd19_novelty_rate",
-    "sm13_embedding_drift", "sm14_jl_projection",
-    "sm15_similarity_histogram",
-    "mm05_pairing_audit", "mm06_frame_dedup",
-]
-
-# ROUND >=6: the rotation is COMPUTED from the CORRECTNESS_r*.json
-# ledgers the driver leaves in the repo root, so no future round needs
-# a hand-pinned list. Staleness rule: a query's evidence round is the
-# newest ledger round whose row is green (err null AND hash_match, or
-# rows_match for the declared rows-only sketch tiers tx27/x49); a
-# failed/errored row is NOT evidence, so mismatches re-enter the
-# window immediately. Never-green queries lead (module order), then
-# ascending evidence round (oldest first), module order as tiebreak.
-# The pinned _PRIORITY above stays authoritative while the newest
-# ledger is r04 (its window was composed by hand for round 5); once
-# CORRECTNESS_r05.json lands, the computed order takes over.
-_PINNED_THROUGH_ROUND = 4
-
-# Declaration round for queries added AFTER the round-5 surface froze.
-# The ledgers can't distinguish two never-green queries, and module
-# order would let this round's brand-new declarations displace the
-# previous round's still-unledgered wave from the 50-row driver
-# window (mm07/mm08 would have waited two extra rounds). Secondary
-# sort key: older declarations verify first; absent = pre-round-6.
-_DECLARED_IN_ROUND = {
-    "x66_decile_migration": 6, "x67_event_funnel": 6,
-    "x68_new_vs_returning": 6, "ts43_ewma_control_chart": 6,
-    "ts44_gap_downtime": 6, "ts45_asof_forward_tolerance": 6,
-    "tx34_packing_curve": 6, "tx35_repetition_profile": 6,
-    "tx36_source_kl_divergence": 6, "dd26_source_quota_sample": 6,
-    "dd27_incremental_dedup": 6, "sm22_rrf_fusion": 6,
-    "sm23_hubness_audit": 6, "mm09_shard_packing": 6,
-    "sm24_ivf_balance_audit": 6, "ts46_max_drawdown": 6,
-    "tx37_token_budget_allocator": 6, "dd28_incremental_neardup": 6,
-    "x69_return_rate_outliers": 6, "ts47_sliding_burst_audit": 6,
-    "tx38_bigram_source_perplexity": 6, "x70_copurchase_pagerank": 6,
-    # third wave (landed after the above; verify after them)
-    "tx39_ccnet_buckets": 7, "tx40_dsir_selection": 7,
-    "dd29_cluster_balanced_sample": 7, "ts48_concurrency_peaks": 7,
-    "sm25_kmeans_lloyd": 7, "sm26_rocchio_prf": 7,
-    # fourth wave
-    "sm27_mips_norm_pruned": 8, "sm28_hard_negative_mining": 8,
-    "tx41_nb_source_classifier": 8, "dd30_semantic_decontamination": 8,
-    # fifth wave
-    "x71_fifo_return_matching": 9, "ts49_bollinger_bands": 9,
-    "tx42_ngram_novelty_rate": 9,
-    # sixth wave
-    "ts50_changepoint_binseg": 10, "x72_association_rules": 10,
-    # seventh wave
-    "x73_er_blocking_audit": 11, "tx43_filter_ablation_grid": 11,
-    # eighth wave
-    "ts51_interrupted_time_series": 12, "sm29_diag_lda_probe": 12,
-    # ninth wave
-    "sm30_reciprocal_nn_pairs": 13, "x74_littles_law_audit": 13,
-    # tenth wave
-    "sm31_farthest_first_coreset": 14,
-    # eleventh wave
-    "x75_poisson_bootstrap_ci": 15,
-    # twelfth wave
-    "ts52_peak_prominence": 16,
-    # thirteenth wave
-    "x76_chi_square_independence": 17, "x77_ks_two_sample": 17,
-    # fourteenth wave
-    "x78_anova_oneway": 18, "mm10_aspect_quota_sample": 18,
-    # fifteenth wave
-    "tx44_heaps_law": 19,
-    # sixteenth wave
-    "x79_welch_t_test": 20, "x80_mann_whitney_u": 20,
-    # seventeenth wave
-    "ts53_anomaly_ensemble": 21, "tx45_data_card": 21,
-    # eighteenth wave
-    "sm32_matryoshka_recall": 22,
-    # nineteenth wave
-    "tx46_span_corruption_plan": 23,
-    # twentieth wave
-    "dd32_dedup_manifest": 24,
-    # round 7, first wave
-    "x73b_er_blocking_capped": 25,
-    # round 7, second wave
-    "ts54_ljung_box_whiteness": 26, "sm33_probe_recall_curve": 26,
-    "dd33_leakage_safe_splits": 26, "mm11_resize_plan": 26,
-    # round 7, third wave
-    "tx47_collocations_pmi": 27, "ts55_lead_lag_xcorr": 27,
-    "x81_duplicate_payment_audit": 27,
-    # round 7, fourth wave
-    "ts56_theil_sen_trend": 28, "dd34_split_contamination": 28,
-    # round 7, fifth wave
-    "tx48_readability_scores": 29, "ts57_classical_decomposition": 29,
-    "x82_revenue_bridge": 29,
-    # round 7, sixth wave
-    "sm34_anisotropy_audit": 30, "ts58_hourly_profile": 30,
-    # round 7, seventh wave
-    "tx49_word_burstiness": 31, "ts59_poisson_fit": 31,
-    "dd35_threshold_sensitivity": 31,
-    # round 7, eighth wave
-    "ts60_runs_test": 32, "tx50_rank_stability": 32,
-    "sm35_mean_removal_shift": 32,
-    # round 8, first wave (the sm23/sm30 ANN-candidate scale tiers)
-    "sm23b_hubness_scaled": 33, "sm30b_reciprocal_nn_scaled": 33,
-    # round 8, second wave
-    "sm36_cell_silhouette": 34, "tx51_zipf_slope": 34,
-    "ts61_mann_kendall": 34, "x83_ship_lag_sla": 34,
-    "dd36_source_copy_matrix": 34, "mm12_payload_routing_plan": 34,
-    "sm37_lsh_table_curve": 34, "dd37_minhash_size_curve": 34,
-    # round 8, third wave
-    "x84_revenue_gini": 35, "tx52_hill_tail_index": 35,
-    "ts62_seasonal_strength": 35,
-    # round 8, fourth wave
-    "tx53_bigram_entropy_rate": 36, "ts63_page_hinkley": 36,
-    "dd38_cluster_source_purity": 36,
-    # round 8, fifth wave
-    "ts64_hurst_rs": 37, "x85_abc_xyz_matrix": 37,
-    "sm38_rerank_depth_curve": 37,
-    # round 8, sixth wave (multiple-testing / k-sample / AR-order stats)
-    "x86_kruskal_wallis": 38, "x87_fdr_bh_screen": 38,
-    "ts65_pacf_yule_walker": 38,
-    # round 8, seventh wave
-    "tx54_mattr_lexical_diversity": 39, "dd39_bloom_prefilter_audit": 39,
-    "sm39_quantization_recall_curve": 39,
-    # round 8, eighth wave
-    "ts66_variance_ratio": 40, "x88_shapley_attribution": 40,
-    "x89_price_index_fisher": 40,
-    # round 8, ninth wave
-    "mm13_audio_frame_plan": 41, "ts67_acf_significance": 41,
-    "x90_eoq_policy": 41,
-    # round 8, tenth wave
-    "tx55_jsd_source_matrix": 42,
-    # round 8, eleventh wave
-    "x91_theil_inequality": 43, "ts68_period_scan": 43,
-    "dd40_keep_rule_agreement": 43,
-    # round 8, twelfth wave
-    "ts69_seasonal_naive_backtest": 44, "tx56_charclass_entropy": 44,
-    "dd41_dup_mass_by_source": 44,
-    # round 8, thirteenth wave
-    "x92_cpk_ship_lag": 45, "sm42_knn_label_agreement": 45,
-    # round 8, fourteenth wave
-    "mm14_modality_token_budget": 46, "x93_degree_assortativity": 46,
-    # round 8, fifteenth wave
-    "tx57_token_artifact_profile": 47, "ts70_mix_share_drift": 47,
-    # round 8, sixteenth wave
-    "sm43_filtered_topk": 48, "ts71_anomaly_run_lengths": 48,
-    # round 8, seventeenth wave
-    "x94_time_to_convert": 49,
-    # round 8, eighteenth wave (sm42's ANN-candidate scale tier)
-    "sm42b_knn_label_scaled": 50,
-    # round 8, nineteenth wave
-    "ts72_hourly_profile_stability": 51,
-    # round 9, first wave (rank-stats + skyline on the new
-    # rankops.cummax_excl distributed prefix-max primitive)
-    "x95_spearman_dependence": 52, "x96_pareto_skyline": 52,
-    # round 9, second wave (classical randomness/concentration tests
-    # over the daily series)
-    "ts73_record_breaking_days": 53, "ts74_turning_points_test": 53,
-    "ts75_traffic_concentration": 53,
-    # round 9, third wave
-    "tx58_char_coverage_curve": 54,
-    # round 9, fourth wave
-    "dd42_seed_stability_audit": 55,
-    # round 9, fifth wave
-    "sm45_dot_cosine_rank_overlap": 56,
-    # round 9, sixth wave
-    "mm15_video_frame_plan": 57,
-    # round 9, seventh wave
-    "tx59_template_prefix_profile": 58,
-    "dd43_shingle_width_curve": 58,
-    # round 9, eighth wave
-    "dd44_chain_merge_audit": 59, "ts77_weekly_retention_curve": 59,
-    "sm46_class_margin_matrix": 59, "x98_sku_repurchase": 59,
-    # round 9, ninth wave
-    "dd45_neardup_token_accounting": 60,
-    "tx60_length_lognormal_fit": 60,
-    # round 9, tenth wave
-    "ts78_user_concentration": 61,
-    # round 9, eleventh wave (candidate-generation sensitivity pair)
-    "dd46_minhash_vs_simhash": 62, "dd47_sampled_dedup_bias": 62,
-    # round 9, twelfth wave
-    "sm47_centroid_distance_anova": 63,
-    # round 9, thirteenth wave
-    "ts79_asof_nearest": 64,
-    # round 9, fourteenth wave
-    "sm48_bitext_margin_mining": 65, "tx61_k_anonymity_audit": 65,
-    # round 10, first wave (sm48's ANN-candidate scale tier — round-9
-    # verdict task #2)
-    "sm48b_bitext_margin_scaled": 66,
-    # round 10, second wave (engine-infra declared queries — round-9
-    # verdict task #3: avro datasource, skewed join, merge maintenance)
-    "io01_avro_batch_roundtrip": 67, "io02_skew_hot_key_join": 67,
-    "io03_merge_upsert_state": 67,
-    # round 10, third wave (sm46's exact moment-identity scale tier)
-    "sm46b_class_margin_sums": 68,
-    # round 10, fourth wave (Z-order layout maintenance)
-    "io04_zorder_layout_scan": 69,
-    # round 10, fifth wave (delete + compaction maintenance)
-    "io05_delete_keys_state": 70, "io06_compact_small_files": 70,
-    # round 10, sixth wave (schema evolution + partition pruning)
-    "io07_schema_evolution_read": 71, "io08_partition_pruned_scan": 71,
-    # round 11, first wave (the last two tested-but-undeclared plan
-    # capabilities — round-10 verdict task #1: dynamic partition
-    # pruning and the bucketed shuffle-free join)
-    "io09_dynamic_partition_pruning": 72,
-    "io10_bucketed_colocated_join": 72,
-    # round 11, second wave (the remaining pytest-only engine
-    # capabilities converted to contract: runtime bloom-filter join
-    # pruning and dynamic-partition-overwrite backfill)
-    "io11_runtime_bloom_join": 73,
-    "io12_dynamic_overwrite_backfill": 73,
-    # round 11, third wave (io02's strategy twin: the manual salted
-    # fallback for joins AQE declines to split)
-    "io13_salted_join_fallback": 74,
-    # round 11, fourth wave (versioned table: COW snapshots,
-    # time-travel reads, audit-preserving rollback)
-    "io14_time_travel_read": 75,
-}
-
-
-def _ledger_rounds(root):
-    """Yield (round_number, parsed_ledger) for every readable ledger."""
-    import json
-    import re
-
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = re.match(r"CORRECTNESS_r(\d+)\.json$", p.name)
-        if not m:
-            continue
-        try:
-            with open(p) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue  # unreadable/corrupt ledger: skip, never crash import
-        if isinstance(data, dict):
-            yield int(m.group(1)), data
-
-
-def _compute_priority(merged, root=None):
-    """Staleness-ordered query names, or None to use the pinned list."""
-    from pathlib import Path
-
-    if root is None:
-        root = Path(__file__).resolve().parents[1]
-    names = list(merged.queries())
-    module_pos = {n: i for i, n in enumerate(names)}
-    has_oracle = set(merged.oracles())
-    evidence = dict.fromkeys(names, 0)  # 0 = never green
-    latest_failed = {}  # name -> round of its newest FAILED ledger row
-    newest = 0
-    for rnd, rows in _ledger_rounds(root):
-        newest = max(newest, rnd)
-        for name, row in rows.items():
-            if name not in module_pos or not isinstance(row, dict):
-                continue
-            green = not row.get("err") and (
-                row.get("hash_match")
-                or (row.get("rows_match") and name not in has_oracle)
-            )
-            # The declared rows-only class (registry oracle=None, i.e.
-            # tx27's external-codec scorer): the driver records
-            # err="no_oracle" with the executed row count and nothing
-            # else, so such a row can never satisfy `green` — without
-            # this clause the query would sit at evidence=0 forever and
-            # burn the #1 window slot EVERY round (round-7 verdict task
-            # #7). A clean driver execution (rows produced, no real
-            # error) IS the strongest external signal this class can
-            # emit; exactness is pinned elsewhere (pytest zlib replay +
-            # golden-byte contract + the sweep's DuckDB bounds check).
-            if name not in has_oracle and row.get("err") == "no_oracle":
-                green = (row.get("spark_rows") or 0) > 0
-            if green:
-                evidence[name] = max(evidence[name], rnd)
-                if latest_failed.get(name, 0) <= rnd:
-                    latest_failed.pop(name, None)
-            elif row.get("err") != "no_oracle":
-                # A real failure (hash mismatch / query error) — not the
-                # designed rows-only class. Remember it so a regression
-                # re-enters the window immediately instead of coasting
-                # on stale green evidence.
-                latest_failed[name] = rnd
-    if newest <= _PINNED_THROUGH_ROUND:
-        return None
-    for name, rnd in latest_failed.items():
-        if rnd >= evidence[name]:  # newest row is the failure → re-verify now
-            evidence[name] = 0
-    return sorted(
-        names,
-        key=lambda n: (
-            evidence[n],
-            _DECLARED_IN_ROUND.get(n, 0),
-            module_pos[n],
-        ),
-    )
-
-
 ALL = QueryRegistry()
-_all_merged = _MERGED.queries()
-_order = _compute_priority(_MERGED) or _PRIORITY
-for _name in _order:
-    ALL.add(_all_merged[_name])
-for _name, _q in _all_merged.items():
-    if _name not in set(_order):
-        ALL.add(_q)
+for _mod in (relational, extended, tpch, timeseries, text, dedup, similarity, multimodal, io_infra):
+    ALL.merge(_mod.REGISTRY)
 
 
 def queries():

@@ -70,27 +70,48 @@ def test_hll_rollup_tolerance(spark):
         assert r["rel_err"] <= 0.05, (r["event_type"], r["rel_err"])
 
 
-def test_registry_window_invariants():
-    """The driver checks the FIRST 50 entries of queries() in dict order —
-    protect the window from registry edits: the priority list must hold
-    exactly 50 unique, existing names, and every declared query must be
-    reachable (no orphaned priority entries, no duplicate registrations).
-    While the newest ledger is <= the pinned round the window must equal
-    the hand-pinned list; after that the ledger-computed rotation owns
-    the order (behavior pinned in test_registry_rotation.py)."""
+def test_registry_is_module_order():
+    """The public surface is the nine operator modules' registries merged
+    in module order: every declared query once, each module's queries in
+    declaration order, no oracle without its query."""
     from pyconnect_spark import registry
-    from pyconnect_spark.registry import ALL, _PRIORITY
+    from pyconnect_spark.operators import (
+        dedup, extended, io_infra, multimodal, relational, similarity, text, timeseries, tpch,
+    )
 
-    names = list(ALL.queries().keys())
-    assert len(_PRIORITY) == 50
-    assert len(set(_PRIORITY)) == 50
-    assert set(_PRIORITY) <= set(names)
-    assert len(names) == len(set(names))
-    computed = registry._compute_priority(registry._MERGED)
-    if computed is None:
-        assert names[:50] == _PRIORITY
-    else:
-        assert names[: len(computed)] == computed
+    names = list(registry.queries())
+    assert len(names) == len(set(names)) == 383
+    modules = (relational, extended, tpch, timeseries, text, dedup, similarity, multimodal, io_infra)
+    assert names == [n for mod in modules for n in mod.REGISTRY.queries()]
+    assert set(registry.oracles()) <= set(names)
+
+
+def test_registry_window_invariants():
+    """Whatever prefix ("window") of the public surface a caller verifies
+    is cut from one fixed list: __spark_entry__ serves the registry's
+    builders and oracles unchanged, every name resolves through get() to
+    its own builder, and every oracle is non-empty SQL."""
+    import __spark_entry__
+    from pyconnect_spark import registry
+
+    builders = __spark_entry__.queries()
+    assert list(builders) == list(registry.queries())
+    assert __spark_entry__.oracle_sql() == registry.oracles()
+    for name, builder in builders.items():
+        q = registry.get(name)
+        assert q.name == name and q.builder is builder
+    assert all(isinstance(sql, str) and sql.strip() for sql in registry.oracles().values())
+
+
+def test_query_index_doc_is_registry_order():
+    """docs/QUERIES.md (tools/gen_query_index.py) lists the declared
+    queries in registry order, one row each."""
+    import re
+    from pathlib import Path
+
+    doc = Path(__file__).resolve().parents[1] / "docs" / "QUERIES.md"
+    rows = re.findall(r"^\| \d+ \| `([^`]+)` \|", doc.read_text(), flags=re.M)
+    assert rows == list(ALL.queries())
 
 
 def test_kll_rollup_tolerance(spark):

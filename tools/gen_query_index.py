@@ -13,8 +13,8 @@ HEADER = """# Declared query index
 
 Auto-generated from `pyconnect_spark.registry` (`python tools/gen_query_index.py`).
 One row per declared operator/query: the driver-checked contract surface.
-Order = the driver's verification window order (first 50 = current round's
-window).
+Order = registry order: the operator modules in `registry.py`'s order,
+each in declaration order.
 
 | # | query | oracle | tags | summary |
 |---|---|---|---|---|

@@ -1,10 +1,11 @@
-"""Capture .explain("formatted") for named queries into plans/r12/.
+"""Capture .explain("formatted") for named queries into build/plans/<tag>/.
 
-Usage: python tools/plan_capture.py before|after name [name ...]
-       python tools/plan_capture.py before --top N   (top-N from BENCH_DETAIL.json)
+Usage: python tools/plan_capture.py <tag> name [name ...]
+       python tools/plan_capture.py <tag> --top N   (top-N from BENCH_DETAIL.json)
 
 Planning only — no execution — so it is cheap and safe to run while other
-jobs own the CPUs. Output: plans/r12/<name>_<tag>.txt
+jobs own the CPUs. Output: build/plans/<tag>/<name>.txt (build/ is not
+tracked); capture one tag before a change and one after, then diff them.
 """
 from __future__ import annotations
 
@@ -29,7 +30,7 @@ def main() -> None:
         detail = json.load(open(os.path.join(REPO, "BENCH_DETAIL.json")))
         ranked = sorted(detail["queries"].items(), key=lambda kv: -kv[1])
         names = [k for k, _ in ranked[:n] if k != "stream_window_events"]
-    out_dir = os.path.join(REPO, "plans", os.environ.get("PLAN_ROUND", "r12"))
+    out_dir = os.path.join(REPO, "build", "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plan-capture")
     builders = ALL.builders()
@@ -41,7 +42,7 @@ def main() -> None:
             )
         except Exception as exc:  # noqa: BLE001
             plan = f"ERROR: {type(exc).__name__}: {exc}"
-        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as f:
             f.write(plan)
         print(f"{name}: {len(plan)} chars -> {path}")
