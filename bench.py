@@ -8,7 +8,8 @@ The driver captures only the LAST ~2000 chars of combined output, so the
 JSON line must (a) be the absolute last thing printed — after
 spark.stop(), so no shutdown logs trail it — and (b) stay under ~1.8 KB.
 The printed "queries" dict therefore carries only COMMON_45, the frozen
-cross-round comparison basis (BENCH_r03's exact key set); the full
+cross-round comparison basis (the exact key set of BENCH_r03.json,
+now only in git history: `git show 0fe20f8:BENCH_r03.json`); the full
 per-query detail for all ~120 headline queries is written to
 BENCH_DETAIL.json beside this script.
 
@@ -32,9 +33,10 @@ from pyconnect_spark.registry import ALL
 from pyconnect_spark.session import get_spark
 
 # COMMON_45: the FROZEN cross-round comparison basis — exactly the key set
-# BENCH_r03 recorded. Never edit this list; rounds are compared on it
-# apples-to-apples even as HEADLINE grows. (stream_window_events is the
-# streaming unit timed by bench_streaming, not a registry query.)
+# BENCH_r03 recorded (`git show 0fe20f8:BENCH_r03.json`). Never edit this
+# list; rounds are compared on it apples-to-apples even as HEADLINE grows.
+# (stream_window_events is the streaming unit timed by bench_streaming, not
+# a registry query.)
 COMMON_45 = [
     "b01_filter_project", "b03_tpch_q1", "b05_join_agg", "b06_tpch_q3",
     "b07_left_join", "b10_broadcast_join", "b11_range_join",
@@ -101,8 +103,8 @@ HEADLINE = [
     "sm06_ann_mllib_lsh",
     "sm09_ann_recall_audit",
     "mm03_frame_sample",
-    # round-4 additions (not in BENCH_r03's 45-query basis; diff rounds on
-    # the common subset)
+    # round-4 additions (not in BENCH_r03's 45-query basis, see COMMON_45;
+    # diff rounds on the common subset)
     "tx15_pii_redaction",
     "tx16_chunk_dedup",
     "x36_tpch_q4",

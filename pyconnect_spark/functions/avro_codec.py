@@ -19,8 +19,9 @@ block then 0 for arrays and maps):
   prefix text (``_compile``). No Python worker runs, so a batch pays no
   per-task Python start-up and no per-record Python dispatch
   (docs/SCALE.md §13). Confluent framing stays a SQL expression
-  (``wrap_confluent``/``unwrap_confluent``). The session must have been
-  started by ``get_spark``, which puts the jar on the classpath.
+  (``wrap_confluent``/``unwrap_confluent``). ``session.java_udf``
+  registers the UDFs, adding the jar to a session whose JVM was launched
+  without it.
 - ``encode`` / ``decode`` run in-process for Python callers (the OCF
   container in ``sources/avro_ocf.py``) and are the oracle the tests hold
   the JVM codec to; golden byte sequences in the tests pin both.
@@ -260,25 +261,11 @@ def _map_entries(col: Column, schema: Any) -> Column:
     return F.when(col.isNotNull(), F.struct(*fields))
 
 
-def _udf(name: str, java_class: str, return_type: str) -> str:
-    """``name``, registered as ``java_class`` in the active session unless it
-    already is (the name encodes the class and the return type)."""
-    if not session._jvm_has_jar():
-        raise RuntimeError(
-            "the Avro column codec runs in the package jar, which this session's JVM was "
-            "started without; start the session with pyconnect_spark.session.get_spark"
-        )
-    spark = SparkSession.active()
-    if not spark.catalog.functionExists(name):
-        spark.udf.registerJavaFunction(name, java_class, return_type)
-    return name
-
-
 def to_avro_py(col: Column, schema: dict, *, schema_id: int | None = None) -> Column:
     """struct/primitive column → Avro binary, Confluent-framed when
     ``schema_id`` is given; record fields are matched by name. NULL → NULL."""
     text = _compile(schema)
-    udf = _udf("pyconnect_avro_encode", "pyconnect.avro.Encode", "binary")
+    udf = session.java_udf(SparkSession.active(), "pyconnect_avro_encode", "pyconnect.avro.Encode", "binary")
     payload = F.call_udf(udf, _map_entries(col, schema), F.lit(text))
     return payload if schema_id is None else wrap_confluent(payload, schema_id)
 
@@ -291,6 +278,8 @@ def from_avro_py(
     NULL; a truncated or malformed payload fails the task."""
     text = _compile(schema)
     digest = hashlib.sha1(spark_type.encode()).hexdigest()[:16]
-    udf = _udf(f"pyconnect_avro_decode_{digest}", "pyconnect.avro.Decode", spark_type)
+    udf = session.java_udf(
+        SparkSession.active(), f"pyconnect_avro_decode_{digest}", "pyconnect.avro.Decode", spark_type
+    )
     payload = unwrap_confluent(col) if confluent_framed else col
     return F.call_udf(udf, payload, F.lit(text))

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyconnect_spark.cachereg import track
 from pyconnect_spark.operators._util import spread, spread_on, t
 from pyconnect_spark.query import QueryRegistry
+from pyconnect_spark.session import java_udf
 
 REGISTRY = QueryRegistry()
 
@@ -44,7 +45,7 @@ _N_HASHES = 64
 _N_BANDS = 8
 _ROWS_PER_BAND = _N_HASHES // _N_BANDS
 # 31-bit Mersenne prime field: a*h + b stays under 2^62, so the affine
-# permutations never overflow Spark's long arithmetic (ANSI multiplyExact).
+# permutations never overflow a long (the Java kernel's or DuckDB's BIGINT).
 _MERSENNE = (1 << 31) - 1
 # Deterministic affine hash family h_i(x) = (a_i*x + b_i) mod p — constants
 # from a fixed LCG so every run/partitioning agrees.
@@ -187,53 +188,26 @@ def minhash_signatures(
 ) -> DataFrame:
     """doc_id → array<long> minhash signature — shuffle-free.
 
-    Word-3-gram shingles stay an *array* per document; each of the k
-    permutations is array_min(transform(hashed_shingles, affine_i)). The
-    whole signature is one narrow projection: no explode, no groupBy, no
-    shuffle — a map-only stage that scales with input splits alone.
-    (The earlier explode + 64-way min-agg formulation shuffled ~50 shingle
-    rows per doc and was ~2× slower at sf0.1.)
-    """
-    n = 3
+    The tokens are Spark's own ``split(trim(text), '\\s+')``; the package
+    jar's ``pyconnect.dedup.MinHash`` (a Java UDF) takes the token array and
+    returns the signature: its word 3-grams, each hashed to the first 15 hex
+    chars of md5 (60 bits) mod the Mersenne field, and for each
+    ``_hash_params(i + param_offset)`` the minimum affine image over them.
+    md5 is a public hash and the rest is integer math, so DuckDB replays the
+    whole MinHash+LSH pipeline bit-identically (``_minhash_pipeline_ctes``).
+    One narrow projection: no explode, no groupBy, no shuffle, and no
+    per-element interpretation of SQL lambdas (docs/SCALE.md §6)."""
     with_toks = docs.select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
     )
+    udf = java_udf(docs.sparkSession, "pyconnect_minhash", "pyconnect.dedup.MinHash", "array<bigint>")
     # Small local files arrive as one partition; spread the map work
     # (conditional + keyed: no-op when the scan already has >= cores
     # partitions, hash-keyed so no round-robin pre-sort).
-    # Shingle hash: first 15 hex chars of md5 (60 bits) mod the Mersenne
-    # field — a public hash both engines compute bit-identically, which is
-    # what makes the whole MinHash+LSH pipeline oracle-checkable in DuckDB
-    # (measured cost parity with xxhash64 at sf0.1: the 64 affine
-    # permutations dominate, not the shingle hash).
-    hashed = spread(with_toks, "doc_id").select(
+    return spread(with_toks, "doc_id").select(
         "doc_id",
-        F.expr(
-            f"transform({_word_shingle_sql('toks', n)}, "
-            f"s -> pmod(CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT), {_MERSENNE}))"
-        ).alias("hs"),
+        F.call_udf(udf, F.col("toks"), F.lit(n_hashes), F.lit(param_offset)).alias("signature"),
     )
-    # One aggregate pass with a k-wide accumulator instead of k separate
-    # array_min(transform(...)) traversals. Values are bit-identical (the
-    # update is MIN((a_i*h + b_i) % p) either way — checksum-verified), but
-    # the k-traversal form generates ~k codegen loops and costs ~6 s of
-    # whole-stage-codegen COMPILE on first execution at k=64; this form
-    # compiles in <1 s with identical warm runtime (~0.6 s at sf0.1).
-    # Under bench's min-of-2 on a steal-prone host, a 6 s pass-1 makes the
-    # reported min hostage to pass-2 noise — this was the bulk of the
-    # round-3 "dd03 2x regression" (the md5 family itself re-measured at
-    # cost parity with xxhash64 this round). The k literal (a, b) pairs
-    # are SQL text: built column by column they cost ~0.5 s of py4j calls.
-    params = ", ".join(
-        f"named_struct('a', {a}, 'b', {b})"
-        for a, b in (_hash_params(i + param_offset) for i in range(n_hashes))
-    )
-    init = ", ".join([f"CAST({_MERSENNE} AS BIGINT)"] * n_hashes)
-    signature = F.expr(
-        f"aggregate(hs, array({init}), (acc, h) -> zip_with(acc, array({params}), "
-        f"(m, p) -> least(m, (h * p.a + p.b) % {_MERSENNE})))"
-    )
-    return hashed.select("doc_id", signature.alias("signature"))
 
 
 def band_keys(
@@ -360,13 +334,11 @@ def _dd03_oracle_sql() -> str:
 )
 def dd03(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    # Deliberate cache (unlike dd02/dd07): the signature stage costs ~1.5 s
-    # at sf0.1 and THREE downstream branches consume it (band join + both
-    # sides of the estimate join) — uncached, the subtree re-executes 3x.
-    # At 100 TB the equivalent move is materializing the signature table
-    # once (write parquet, read thrice), which also survives the session.
-    sig = track(minhash_signatures(docs).cache())
-    sig.count()  # materialize once; three downstream branches reuse the cache
+    # No cache: three branches read the signatures (band join and both
+    # sides of the estimate join), and recomputing the map-only Java
+    # kernel costs less than an eager cache fill, which was two of the
+    # query's Spark jobs (docs/SCALE.md §11).
+    sig = minhash_signatures(docs)
     pairs = lsh_candidate_pairs(sig)
     a = sig.alias("sa")
     b = sig.alias("sb")
@@ -638,8 +610,8 @@ def lsh_verified_edges(
     scale-shaped one.
 
     Plan: one plan, no action. The signatures are minhash_signatures'
-    own plan, so a session that ran dd03 reads them from its cache
-    (CacheManager matches by canonical plan). Each document's shingle
+    own plan, so a session that cached them (dd10) reads them from its
+    cache (CacheManager matches by canonical plan). Each document's shingle
     set is one row (doc_id, array of xxhash64 shingle hashes, the same
     hashes the exact tier joins on) computed over the same spread
     token frame as the signatures (one reused exchange). A candidate

@@ -6,9 +6,11 @@
 - **Embedding near-dup pairs** (`sm02`): all-pairs cosine above a
   threshold (exact, oracle-checked at fixture scale; quadratic ground
   truth for the LSH variant).
-- **Random-hyperplane LSH ANN** (`sm03`): the scale path. 16 fixed
-  hyperplanes → sign bits → bucket key; candidates only within the query's
-  bucket. Recall vs sm01 is asserted in tests/test_similarity.py.
+- **Random-hyperplane LSH ANN** (`sm03`): the scale path. 12 tables of 6
+  md5-derived hyperplanes (72) → sign bits → one bucket key per table, in
+  the package jar's Java kernel (``lsh_tables``); candidates only within
+  the query's buckets and their Hamming-1 neighbours. Recall vs brute
+  force is tracked by sm37 and tools/ann_tune.py.
 
 DuckDB oracles use list_cosine_similarity over double-cast lists; both
 engines accumulate left-to-right in double, and outputs are rounded to
@@ -25,6 +27,7 @@ from pyspark.sql import functions as F
 
 from pyconnect_spark.operators._util import spread, spread_on, t
 from pyconnect_spark.query import QueryRegistry
+from pyconnect_spark.session import java_udf
 
 REGISTRY = QueryRegistry()
 
@@ -527,8 +530,9 @@ def _hyperplanes(dim: int, n_planes: int = 16, prefix: str = "plane") -> np.ndar
     collision-probability ∝ angle property (Goemans-Williamson rounding
     needs only a symmetric direction distribution); measured recall on
     the fixture is unchanged (bench's ann_recall_at_5 tracks it).
-    Generated driver-side once, shipped to executors as literals (tiny:
-    n_planes × dim doubles)."""
+    ``lsh_tables``' Java kernel rebuilds them once per task from this
+    rule; ``eucl_lsh_buckets`` ships them to its pandas UDF in the closure
+    (tiny: n_planes × dim doubles)."""
     import hashlib
 
     return np.array(
@@ -542,68 +546,30 @@ def _hyperplanes(dim: int, n_planes: int = 16, prefix: str = "plane") -> np.ndar
     )
 
 
-def lsh_bucket(emb_col: Column, planes: np.ndarray) -> Column:
-    """Pack sign(dot(v, plane_i)) bits into a long bucket id.
-
-    One Arrow-batched pandas UDF doing a single (batch × dim)·(dim × planes)
-    matrix multiply — one BLAS call per batch. The per-plane fold-expression
-    alternative generates O(planes × dim) nested codegen and was measurably
-    slower; a matmul is the idiomatic vectorized shape for this.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    planes_t = planes.T.astype(np.float64)  # (dim, n_planes)
-    weights = (1 << np.arange(planes.shape[0])).astype(np.int64)
-
-    @pandas_udf("long")
-    def bucket_udf(embs: pd.Series) -> pd.Series:
-        mat = np.vstack(embs.to_numpy())  # (batch, dim)
-        bits = mat.astype(np.float64) @ planes_t > 0  # (batch, n_planes)
-        return pd.Series(bits @ weights)
-
-    return bucket_udf(emb_col)
-
-
 def lsh_tables(emb_col: Column, planes: np.ndarray, n_tables: int, n_bits: int, *, multiprobe: bool = False) -> Column:
     """Multi-table LSH keys: ``array<long>`` of (table << 32 | bucket).
 
-    ``planes`` holds n_tables × n_bits hyperplanes; one matmul computes all
-    sign bits, then each table packs its own n_bits slice. With
-    ``multiprobe=True`` (query side) each table also emits the n_bits
-    buckets at Hamming distance 1 — the standard multiprobe trick that
-    buys recall without growing the corpus index (corpus rows stay
-    n_tables keys; only the handful of query rows fan out wider).
+    ``planes`` is ``_hyperplanes(dim, n)`` with n ≥ n_tables × n_bits; table
+    t packs the sign bits of planes t·n_bits … (t+1)·n_bits − 1, each taken
+    after rounding the projected dot to 9 dp half up (the repo-wide
+    round-to-9-before-decision convention: a last-ulp difference between
+    engines' sums cannot flip a bit). With ``multiprobe=True`` (query side)
+    each table also emits the n_bits buckets at Hamming distance 1 — the
+    standard multiprobe trick that buys recall without growing the corpus
+    index (corpus rows stay n_tables keys; only the handful of query rows
+    fan out wider).
+
+    The keys come from the package jar's ``pyconnect.vec.SignKeys`` (a Java
+    UDF), which rebuilds the md5-derived planes once per task from the same
+    rule instead of carrying them in the plan, so only the first rows of
+    ``_hyperplanes`` are accepted here.
     """
-    from pyspark.sql.functions import pandas_udf
-
     total = n_tables * n_bits
-    assert planes.shape[0] >= total
-    planes_t = planes[:total].T.astype(np.float64)  # (dim, total)
-    weights = (1 << np.arange(n_bits)).astype(np.int64)
-
-    @pandas_udf("array<long>")
-    def keys_udf(embs: pd.Series) -> pd.Series:
-        mat = np.vstack(embs.to_numpy()).astype(np.float64)  # (batch, dim)
-        # Round the projected dots to 9 dp before the sign test: BLAS
-        # blocked accumulation and DuckDB's SUM can differ in the last
-        # ulp, and a dot landing exactly on the sign boundary would
-        # otherwise flip a bit between engines (the repo-wide
-        # round-to-9-before-decision determinism convention).
-        bits = (round9_half_up(mat @ planes_t) > 0).reshape(len(mat), n_tables, n_bits)
-        buckets = bits @ weights  # (batch, n_tables)
-        keys = (np.arange(n_tables, dtype=np.int64) << 32) | buckets
-        if not multiprobe:
-            return pd.Series(list(keys))
-        out = []
-        for row_b in buckets:
-            probes = [(np.int64(t) << 32) | row_b[t] for t in range(n_tables)]
-            for t in range(n_tables):
-                for bit in range(n_bits):
-                    probes.append((np.int64(t) << 32) | (row_b[t] ^ (1 << bit)))
-            out.append(np.array(probes, dtype=np.int64))
-        return pd.Series(out)
-
-    return keys_udf(emb_col)
+    dim = planes.shape[1]
+    if planes.shape[0] < total or not np.array_equal(planes[:total], _hyperplanes(dim, total)):
+        raise ValueError(f"lsh_tables keys against the first {total} rows of _hyperplanes({dim}, ...)")
+    udf = java_udf(SparkSession.active(), "pyconnect_lsh_sign_keys", "pyconnect.vec.SignKeys", "array<bigint>")
+    return F.call_udf(udf, emb_col, F.lit(dim), F.lit(n_tables), F.lit(n_bits), F.lit(multiprobe))
 
 
 @REGISTRY.register(
@@ -657,7 +623,7 @@ def lsh_tables(emb_col: Column, planes: np.ndarray, n_tables: int, n_bits: int, 
     """,
     doc="ANN via multi-table random-hyperplane LSH with query-side "
     "multiprobe: the corpus is indexed once into L tables of b sign bits "
-    "(one matmul, array output — no L separate scans), exploded to "
+    "(one Java kernel call per row, array output — no L separate scans), exploded to "
     "(table|bucket, vec_id) rows; each query probes its own bucket plus "
     "every Hamming-1 neighbor in each table, candidates are unioned "
     "across tables, then exact cosine reranks. Parameters (L=12 tables, "
@@ -727,8 +693,8 @@ def _sm03_impl(emb: DataFrame, n_tables: int = 12, n_bits: int = 6, k: int = 5) 
 def eucl_lsh_buckets(emb_col: Column, planes: np.ndarray, bucket_len: float) -> Column:
     """p-stable Euclidean-bucket LSH keys: ``array<long>`` where entry t is
     floor(dot(unit_vec, plane_t) / bucket_len) — the BucketedRandomProjection
-    hash family. One Arrow-batched matmul per batch (same rationale as
-    lsh_bucket: per-plane fold codegen is measurably slower)."""
+    hash family. One Arrow-batched matmul per batch: a per-plane SQL fold
+    of the dot products measured slower."""
     from pyspark.sql.functions import pandas_udf
 
     planes_t = planes.T.astype(np.float64)  # (dim, n_tables)

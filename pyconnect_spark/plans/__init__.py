@@ -2,6 +2,7 @@
 
 from pyconnect_spark.plans.inspect import (  # noqa: F401
     execute_with_metrics,
+    executed_plans,
     explain_str,
     has_broadcast_join,
     pushed_filters,

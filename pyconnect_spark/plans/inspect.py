@@ -14,8 +14,9 @@ that silently un-pushes a predicate fails CI), and handy interactively:
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
@@ -23,6 +24,31 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[union-attr]
         df._jdf.queryExecution(), mode
     )
+
+
+def executed_plans(spark: SparkSession, run: Callable[[], object]) -> list[str]:
+    """Runs ``run()`` and returns the physical plan of every SQL execution
+    it started, in order: the query's own and those of its eager steps
+    (cache fills, checkpoints), which the final plan shows only as a scan.
+    Read from the session's SQL status store once its listener has caught
+    up."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty(60_000)
+        return store.executionsList()  # ascending execution id
+
+    seen = executions()
+    last = seen.last().executionId() if seen.nonEmpty() else -1
+    run()
+    done = executions()
+    plans = []
+    i = done.size() - 1
+    while i >= 0 and done.apply(i).executionId() > last:
+        plans.append(done.apply(i).physicalPlanDescription())
+        i -= 1
+    return plans[::-1]
 
 
 def pushed_filters(df: DataFrame) -> list[str]:

@@ -9,12 +9,16 @@ defaults set here:
 - ``spark.sql.shuffle.partitions`` sized to cores locally; on a real
   cluster AQE's coalescing makes the initial number much less sensitive.
 - Arrow enabled so every pandas-UDF operator moves columns, not pickled rows.
+- The driver heap defaults to half of physical memory, at most 64g: locally
+  the driver JVM is the whole cluster, and it must fit the host.
 - Session timezone pinned to UTC so timestamp semantics are deterministic
   and independent of the host (also required for oracle comparisons).
 - The ``file:`` scheme, for both the FileSystem and the FileContext API, is
   ``pyconnect.fs.ForkFreeLocalFileSystem`` from the package's own jar
   (``jvm/pyconnect.jar``, put first on the driver classpath; build it with
-  ``make jvm``; it also holds the Avro codec of ``functions/avro_codec.py``).
+  ``make jvm``; it also holds the Java UDFs ``java_udf`` registers: the Avro
+  codec of ``functions/avro_codec.py`` and the MinHash and LSH kernels of
+  ``operators/dedup.py`` and ``operators/similarity.py``).
   pyspark ships no libhadoop, so Hadoop's local filesystem forks ``chmod``
   on every create and mkdirs and ``readlink`` on every link lookup, about
   150 processes per micro-batch of a stateful stream
@@ -37,11 +41,49 @@ _LOCAL_FS = "pyconnect.fs.ForkFreeLocalFileSystem"
 _JAVA_OPTIONS = "-Dderby.system.home=/tmp/pyconnect-spark-derby"
 
 
+# (gateway, answer) of the last class-path probe: a JVM's class path is
+# fixed at launch, and each probe costs five py4j round trips.
+_jar_probe: tuple[object, bool] = (None, True)
+
+
 def _jvm_has_jar() -> bool:
     """True when the driver JVM is yet to start (it will start with the jar)
     or started with it; a JVM someone else launched keeps its filesystems."""
+    global _jar_probe
     gateway = SparkContext._gateway
-    return gateway is None or _JAR in gateway.jvm.java.lang.System.getProperty("java.class.path")
+    if gateway is None:
+        return True
+    if _jar_probe[0] is not gateway:
+        _jar_probe = (gateway, _JAR in gateway.jvm.java.lang.System.getProperty("java.class.path"))
+    return _jar_probe[1]
+
+
+def java_udf(spark: SparkSession, name: str, java_class: str, return_type: str) -> str:
+    """``name``, registered in ``spark`` as ``java_class`` from the package
+    jar unless it already is (the name encodes the class and the return
+    type); call it with ``F.call_udf``. A JVM launched without the jar (a
+    plain ``SparkSession.builder``, as an external driver builds) gets it
+    added to the session first, so the kernels run in any session."""
+    if not spark.catalog.functionExists(name):
+        listed = _jvm_has_jar() or any(
+            row[0].endswith("/" + os.path.basename(_JAR)) for row in spark.sql("LIST JAR").collect()
+        )
+        if not listed:
+            spark.sql(f"ADD JAR '{_JAR}'")
+        spark.udf.registerJavaFunction(name, java_class, return_type)
+    return name
+
+
+def _driver_memory(driver_memory: str | None) -> str:
+    """The heap asked for, else ``$SPARK_GRAFT_DRIVER_MEM``, else half of
+    physical memory capped at 64g: in ``local[N]`` the driver JVM runs every
+    task, and a heap the host cannot back lets the JVM grow until the
+    kernel kills it."""
+    asked = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if asked:
+        return asked
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // (1 << 20)
+    return f"{min(half_mb, 64 * 1024)}m"
 
 
 def get_spark(
@@ -54,9 +96,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with scale-aware defaults.
 
-    ``cores`` defaults to ``$SPARK_GRAFT_CPUS`` or ``*``. On a real cluster
-    the builder would instead carry master/deploy-mode from the environment;
-    nothing else here is local-specific.
+    ``cores`` defaults to ``$SPARK_GRAFT_CPUS`` or ``*``, ``driver_memory``
+    to ``$SPARK_GRAFT_DRIVER_MEM`` or half the host's memory (at most 64g).
+    On a real cluster the builder would instead carry master/deploy-mode
+    from the environment; nothing else here is local-specific.
 
     ``extra_conf`` entries override the defaults, except
     ``spark.driver.extraClassPath`` and ``spark.driver.extraJavaOptions``,
@@ -75,7 +118,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", _driver_memory(driver_memory))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # The fixture `events` table stores TIMESTAMP(NANOS) which Spark's

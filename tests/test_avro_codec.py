@@ -2,7 +2,7 @@
 roundtrip properties over the inferable type surface, the column-level
 Confluent-framed path end-to-end, and the JVM column codec held to the
 in-process ``encode``/``decode``: same bytes, same values, no Python
-worker in its plans, a clear error without the package jar."""
+worker in its plans, and a JVM launched without the package jar gets it."""
 
 from __future__ import annotations
 
@@ -389,33 +389,31 @@ def test_connector_stream_runs_no_python(spark, tmp_path):
     assert sorted(keys) == sorted(f"K{f}{i}" for f in range(2) for i in range(5))
 
 
-_PLAIN_JVM_FIRST = textwrap.dedent(
+_PLAIN_JVM = textwrap.dedent(
     """
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
     from pyconnect_spark.functions.avro_codec import from_avro_py, to_avro_py
-    from pyconnect_spark.session import get_spark
+    from pyconnect_spark.operators.dedup import minhash_signatures
+    from pyconnect_spark.operators.similarity import _hyperplanes, lsh_tables
 
-    SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false").getOrCreate().stop()
-    spark = get_spark("plain-first", cores=1, driver_memory="1g")
-    for call in (lambda: to_avro_py(F.col("v"), "long"), lambda: from_avro_py(F.col("v"), "long", "bigint")):
-        try:
-            call()
-            print("no error")
-        except RuntimeError as e:
-            print(e)
+    spark = SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
+    df = spark.createDataFrame([(7, "a b c d", [0.5] * 64)], "doc_id long, text string, embedding array<float>")
+    print(df.select(from_avro_py(to_avro_py(F.col("doc_id"), "long"), "long", "bigint").alias("v")).first().v)
+    print(len(minhash_signatures(df).first().signature))
+    print(len(df.select(lsh_tables(F.col("embedding"), _hyperplanes(64, 72), 12, 6).alias("k")).first().k))
     spark.stop()
     """
 )
 
 
-def test_a_jvm_launched_without_the_jar_gets_a_clear_error():
-    """A plain builder launched the JVM, so the package jar is not on its
-    classpath: the codec says to start the session with get_spark."""
+def test_a_jvm_launched_without_the_jar_loads_it_for_the_java_udfs():
+    """A plain builder launched the JVM, as an external driver does, so the
+    package jar is not on its classpath: the codec and the curation kernels
+    add it to the session and run."""
     proc = subprocess.run(
-        [sys.executable, "-c", _PLAIN_JVM_FIRST],
+        [sys.executable, "-c", _PLAIN_JVM],
         capture_output=True, text=True, env={**os.environ, "PYTHONPATH": _ROOT}, timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    lines = proc.stdout.strip().splitlines()[-2:]
-    assert len(lines) == 2 and all("get_spark" in line for line in lines), proc.stdout
+    assert proc.stdout.split()[-3:] == ["7", "64", "12"], proc.stdout

@@ -63,10 +63,11 @@ def main():
         t0 = time.time()
         emb = load_table(spark, SF, "embeddings")
         planes = S._hyperplanes(64, n_planes=n_planes)
-        bucketed = emb.withColumn("bucket", S.lsh_bucket(F.col("embedding"), planes))
+        # One table of n_planes bits: its key (table 0 << 32 | bucket) is the bucket.
+        bucketed = emb.withColumn("bucket", S.lsh_tables(F.col("embedding"), planes, 1, n_planes)[0])
         queries = (
             emb.filter(F.col("vec_id") < N_QUERIES)
-            .withColumn("q_bucket", S.lsh_bucket(F.col("embedding"), planes))
+            .withColumn("q_bucket", S.lsh_tables(F.col("embedding"), planes, 1, n_planes)[0])
             .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"), "q_bucket")
         )
         sim = S.cosine(F.col("embedding"), F.col("q_emb"))

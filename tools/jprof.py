@@ -6,8 +6,10 @@ inside its own job group, twice: a cold pass (the first execution of its
 plans in the application, as a fresh batch job sees it) and then a warm
 pass. Operator caches are left in place between queries, as in one
 session's job. For each pass the tool reports the query's Spark jobs,
-stages that ran tasks, tasks and wall time, and at the end the total jobs
-per pass. Many jobs of one or two tasks and a wall far above the task time
+stages that ran tasks, tasks, wall time and the Python evaluation nodes
+in any of its executed plans (cache fills and checkpoints included;
+``python=none`` means no Python worker ran), and at the end the total
+jobs per pass. Many jobs of one or two tasks and a wall far above the task time
 means the query is bound by per-job fixed cost, not by compute.
 
 The session is the benchmark's own (``perfbench/harness.start_session``:
@@ -27,6 +29,7 @@ schema. The curation benchmark's corpus for seed 7 is written by
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -39,16 +42,27 @@ sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def profile(spark, builder, group: str) -> tuple[float, int, int, int]:
+# Physical nodes that hand rows to a Python worker.
+PYTHON_NODE = re.compile(r"\b\w*(?:EvalPython|InPandas|InArrow)\w*")
+
+
+def profile(spark, builder, group: str) -> tuple[float, int, int, int, list[str]]:
     """Builds and collects one query inside job group ``group``; returns
-    (wall seconds, jobs, stages that ran tasks, tasks)."""
+    (wall seconds, jobs, stages that ran tasks, tasks, Python nodes)."""
+    from pyconnect_spark.plans import executed_plans
+
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     sc.setJobGroup(group, group)
-    try:
+    walls = []
+
+    def run() -> None:
         t0 = time.perf_counter()
         builder(spark, SF).collect()
-        wall = time.perf_counter() - t0
+        walls.append(time.perf_counter() - t0)
+
+    try:
+        plans = executed_plans(spark, run)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -63,7 +77,8 @@ def profile(spark, builder, group: str) -> tuple[float, int, int, int]:
         for si in map(tracker.getStageInfo, stage_ids)
         if si and si.numCompletedTasks > 0
     ]
-    return wall, len(jobs), len(tasks), sum(tasks)
+    python = sorted({m for plan in plans for m in PYTHON_NODE.findall(plan)})
+    return walls[0], len(jobs), len(tasks), sum(tasks), python
 
 
 def main() -> None:
@@ -81,10 +96,11 @@ def main() -> None:
         for pass_ in ("cold", "warm"):
             total = 0
             for name in names:
-                wall, jobs, stages, tasks = profile(spark, builders[name], f"jprof-{pass_}-{name}")
+                wall, jobs, stages, tasks, python = profile(spark, builders[name], f"jprof-{pass_}-{name}")
                 total += jobs
                 print(
-                    f"{pass_} {name}: wall={wall:.2f}s jobs={jobs} stages={stages} tasks={tasks}",
+                    f"{pass_} {name}: wall={wall:.2f}s jobs={jobs} stages={stages} tasks={tasks}"
+                    f" python={','.join(python) or 'none'}",
                     flush=True,
                 )
             print(f"{pass_} total jobs={total}", flush=True)
