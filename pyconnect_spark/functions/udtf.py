@@ -2,7 +2,7 @@
 
 Completes the UDF surface the engine exercises: row UDF (b24), pandas UDF
 (sm03/sm05 matmuls), pandas UDAF (x12), mapInPandas (mm02/mm03),
-applyInPandas cogroup (as-of join), applyInPandasWithState (S08/S21) —
+applyInPandasWithState (S08/S21) —
 and now the table-function flavor: one input row fans out to N output
 rows from plain Python, callable from SQL as ``chunk_text(...)`` after
 registration. The reference has no comparable extension point (its only

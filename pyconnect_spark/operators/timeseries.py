@@ -1,16 +1,13 @@
 """Time-series operators: tumbling-window aggregation (batch equivalent of
 the streaming S04 check), sessionization, and as-of join.
 
-As-of join is the one operator here Spark lacks natively. The scalable
-shape is: co-partition both sides on the join key (one shuffle each),
-sort within the co-group, and run a single merge pass — expressed with
-``groupBy().cogroup().applyInPandas`` over Arrow batches (vectorized
-``pd.merge_asof`` per group). DuckDB's native ASOF JOIN is the oracle.
+As-of join is the one operator here Spark lacks natively. ``asof_join``
+expresses it as a union of both sides and one carry-forward window over
+the join key: one shuffle, no Python worker. DuckDB's native ASOF JOIN
+is the oracle.
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, Window
@@ -158,29 +155,6 @@ def ts05(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _asof_merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-    """Per-cogroup backward as-of merge (orders of one customer × events of
-    the matching user). Arrow-batched; single sorted pass per group."""
-    left = left.sort_values("o_orderdate")
-    out = left[["o_orderkey"]].copy()
-    if len(right) == 0:
-        out["last_event_id"] = pd.array([None] * len(left), dtype="Int64")
-        return out
-    right = right.sort_values("ts")
-    lts = left["o_orderdate"].astype("datetime64[us]")
-    rts = right["ts"].astype("datetime64[us]")
-    merged = pd.merge_asof(
-        pd.DataFrame({"t": lts, "o_orderkey": left["o_orderkey"].values}),
-        pd.DataFrame({"t": rts, "event_id": right["event_id"].values}),
-        on="t",
-        direction="backward",
-        allow_exact_matches=True,
-    )
-    out = merged[["o_orderkey"]].copy()
-    out["last_event_id"] = merged["event_id"].astype("Int64")
-    return out
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -226,18 +200,6 @@ def asof_join(
         .withColumn("last_event_id", F.last("event_id", ignorenulls=True).over(w))
         .filter(F.col("tag") == 1)
         .select("o_orderkey", "last_event_id")
-    )
-
-
-def asof_join_pandas(orders: DataFrame, events: DataFrame) -> DataFrame:
-    """Alternative as-of join: cogroup + vectorized pd.merge_asof per
-    group. Preferable only when groups are few and huge (per-group Python
-    dispatch amortized); kept as the reference implementation the window
-    variant is tested against."""
-    return (
-        orders.groupBy("o_custkey")
-        .cogroup(events.groupBy("user_id"))
-        .applyInPandas(_asof_merge, schema="o_orderkey long, last_event_id long")
     )
 
 

@@ -26,6 +26,7 @@ from __future__ import annotations
 import glob as _glob
 import io
 import os
+import time
 from typing import Iterator
 
 from pyspark.sql.datasource import (
@@ -40,7 +41,12 @@ from pyspark.sql.types import StructType
 
 from pyconnect_spark.functions.avro import avro_to_spark_type
 from pyconnect_spark.functions.avro import spark_type_to_avro
-from pyconnect_spark.sources.avro_ocf import iter_records, parse_header, write_container
+from pyconnect_spark.sources.avro_ocf import (
+    iter_records,
+    parse_header,
+    part_file_name,
+    write_container,
+)
 
 
 def _list_files(options, *, allow_empty: bool = False) -> list[str]:
@@ -115,10 +121,12 @@ class AvroOcfStreamReader(SimpleDataSourceStreamReader):
     micro-batch decodes the files that appeared since the last committed
     offset, and Spark's checkpoint makes restarts resume exactly there
     (the same offset contract as streaming/pysource.py, applied to the
-    batch DataSource's format). The append-only, monotonic-name layout
-    (part-0001.avro, part-0002.avro, ...) is exactly what AvroOcfWriter
-    and every staging producer emit; files must be complete when they
-    become visible (write-then-rename, which the writer does)."""
+    batch DataSource's format). The directory must be append-only and a
+    later file must sort after every earlier one: AvroOcfWriter and
+    ``write_avro`` name files by the write's start time
+    (``avro_ocf.part_file_name``), so appends through either qualify.
+    Files must be complete when they become visible (write-then-rename,
+    which both writers do)."""
 
     def __init__(self, schema: StructType, options):
         self._schema = schema
@@ -168,6 +176,7 @@ class AvroOcfWriter(DataSourceWriter):
         self._path = options.get("path")
         if not self._path:
             raise ValueError("pyconnect_avro: .save(path) is required")
+        self._write_ns = time.time_ns()
         if overwrite and os.path.isdir(self._path):
             for f in os.listdir(self._path):
                 if f.endswith(".avro"):
@@ -176,7 +185,6 @@ class AvroOcfWriter(DataSourceWriter):
 
     def write(self, iterator) -> _OcfCommit:
         import itertools
-        import uuid
 
         # Stream rows through the block encoder — a multi-GB partition is
         # never materialized as a Python list. Peek one row so empty
@@ -195,7 +203,7 @@ class AvroOcfWriter(DataSourceWriter):
                 yield rec
 
         payload = write_container(counted(), self._avro_schema, codec="null")
-        fname = os.path.join(self._path, f"part-{uuid.uuid4().hex}.avro")
+        fname = os.path.join(self._path, part_file_name(self._write_ns))
         with open(fname + ".tmp", "wb") as fh:
             fh.write(payload)
         os.replace(fname + ".tmp", fname)

@@ -37,6 +37,7 @@ from __future__ import annotations
 import io
 import json
 import os
+import time
 import uuid
 import zlib
 from typing import Any, Iterable, Iterator
@@ -198,6 +199,15 @@ def read_avro(spark: SparkSession, path: str, glob: str = "*.avro") -> DataFrame
     return files.select("content").mapInPandas(decode_files, schema=spark_type)
 
 
+def part_file_name(write_ns: int) -> str:
+    """File name of one partition of an OCF write that started at
+    ``write_ns`` (``time.time_ns()``, taken once on the driver): the
+    zero-padded start sorts every file of a later write after every file
+    of an earlier one, which the stream reader's offset (an index into the
+    name-sorted listing) relies on; the uuid keeps a write's files apart."""
+    return f"part-{write_ns:020d}-{uuid.uuid4().hex}.avro"
+
+
 def write_avro(
     df: DataFrame, path: str, *, codec: str = "null", block_records: int = 4096
 ) -> int:
@@ -205,6 +215,7 @@ def write_avro(
     `path` must be a shared filesystem on a real cluster, like any Spark
     sink). Returns total rows written."""
     schema = spark_type_to_avro(df.schema, name="value")
+    write_ns = time.time_ns()
     os.makedirs(path, exist_ok=True)
 
     def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -221,7 +232,7 @@ def write_avro(
             return
         import itertools
 
-        fname = os.path.join(path, f"part-{uuid.uuid4().hex}.avro")
+        fname = os.path.join(path, part_file_name(write_ns))
         n = 0
 
         def counted() -> Iterator[dict]:

@@ -55,38 +55,6 @@ def read_text(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.text(path)
 
 
-def read_orc(spark: SparkSession, path: str, columns: Optional[list[str]] = None) -> DataFrame:
-    df = spark.read.orc(path)
-    return df.select(*columns) if columns else df
-
-
-def read_jdbc(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    *,
-    partition_column: Optional[str] = None,
-    lower_bound: Optional[int] = None,
-    upper_bound: Optional[int] = None,
-    num_partitions: int = 8,
-    properties: Optional[dict[str, str]] = None,
-) -> DataFrame:
-    """JDBC scan. Always pass a numeric partition_column + bounds for any
-    table that doesn't fit one task — otherwise the whole table arrives
-    through a single connection."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions))
-        )
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
 def read_binary_files(spark: SparkSession, path: str, glob: Optional[str] = None) -> DataFrame:
     """Blob ingestion: (path, modificationTime, length, content) rows."""
     reader = spark.read.format("binaryFile")

@@ -20,16 +20,23 @@ each output file covers a contiguous sort range within its partition
 ``sortWithinPartitions`` fixes intra-file order, then the DataFrame
 writer fans out per-partition directories. The manifest is computed from
 the written footers (a metadata-only read), not by re-scanning data.
+
+The table-maintenance half (``compact_parquet``, ``merge_upsert``,
+``delete_keys``) lists, deletes and renames through the path's Hadoop
+FileSystem, the one Spark writes the table with, so ``file:``,
+``hdfs:``, ``s3a:`` and ``viewfs:`` targets behave alike.
 """
 
 from __future__ import annotations
 
 import json
-import os
 from typing import Sequence
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from pyconnect_spark.streaming.epoch import _fs, glob_status
 
 
 def write_training_shards(
@@ -63,25 +70,24 @@ def shard_manifest(spark: SparkSession, path: str) -> list[dict]:
     every data file under ``path`` — row counts come from parquet footers
     via a metadata-only aggregation, not a data scan."""
     df = spark.read.parquet(path)
-    part_cols = [
-        f.name
-        for f in df.schema.fields
-        if f"{f.name}=" in "|".join(_partition_dirs(path))
-    ]
+    dirs = {
+        name.split("=", 1)[0]
+        for rel, _ in _data_files(spark, path)
+        for name in rel.split("/")[:-1]
+    }
+    part_cols = [f.name for f in df.schema.fields if f.name in dirs]
     counted = (
         df.groupBy(F.input_file_name().alias("file"), *part_cols)
         .agg(F.count("*").alias("rows"))
         .collect()
     )
-    base = os.path.abspath(path)
+    fs, root = _fs(spark, path)
+    base = fs.makeQualified(root).toUri().getPath().rstrip("/") + "/"
     out = []
     for r in sorted(counted, key=lambda r: r["file"]):
-        rel = r["file"]
-        rel = rel[len("file:"):] if rel.startswith("file:") else rel
-        rel = os.path.relpath(rel, base)
         out.append(
             {
-                "file": rel,
+                "file": unquote(urlparse(r["file"]).path)[len(base):],
                 "rows": r["rows"],
                 **{c: r[c] for c in part_cols},
             }
@@ -91,18 +97,9 @@ def shard_manifest(spark: SparkSession, path: str) -> list[dict]:
 
 def write_manifest(spark: SparkSession, path: str) -> str:
     """Materialize the manifest as ``_manifest.json`` beside the data."""
-    manifest = shard_manifest(spark, path)
-    target = os.path.join(path, "_manifest.json")
-    with open(target, "w") as fh:
-        json.dump(manifest, fh, indent=1)
+    target = f"{path.rstrip('/')}/_manifest.json"
+    _write_text(spark, target, json.dumps(shard_manifest(spark, path), indent=1))
     return target
-
-
-def _partition_dirs(path: str) -> list[str]:
-    names: list[str] = []
-    for root, dirs, _ in os.walk(path):
-        names.extend(d for d in dirs if "=" in d)
-    return names
 
 
 def compact_parquet(
@@ -142,11 +139,7 @@ def compact_parquet(
     """
     import math
 
-    total = 0
-    for root, _dirs, files in os.walk(src):
-        for name in files:
-            if not name.startswith("_") and not name.startswith("."):
-                total += os.path.getsize(os.path.join(root, name))
+    total = sum(size for _, size in _data_files(spark, src))
     df = spark.read.parquet(src)
     if not partition_by:
         n_files = max(1, math.ceil(total / target_file_bytes))
@@ -178,12 +171,7 @@ def compact_parquet(
             .drop("_files", "_salt")
         )
         salted.write.mode("overwrite").partitionBy(*partition_by).parquet(dst)
-    written = 0
-    for root, _dirs, files in os.walk(dst):
-        written += sum(
-            1 for f in files if not f.startswith("_") and not f.startswith(".")
-        )
-    return written
+    return len(_data_files(spark, dst))
 
 
 def zorder_value(cols: Sequence[str], stats: dict[str, tuple[float, float]], n_bits: int = 16):
@@ -280,134 +268,22 @@ def merge_upsert(
     insert. Returns the number of rows written.
 
     Without Delta/Iceberg, parquet has no row-level MERGE INTO — the
-    engine-native move is *partition-scoped rewrite*: find the partitions
-    the updates touch (one tiny distinct over the updates), read ONLY
-    those partitions back (partition pruning on the target scan), anti-
-    join out the superseded keys, union the updates, and rewrite just
-    those directories via dynamic partitionOverwriteMode. Untouched
-    partitions are never read OR written — at 100 TB an upsert batch
-    touching 0.1% of partitions costs 0.1% of a full rewrite, which is
-    the entire point of partitioning the target by an update-locality
-    column (ingest date, source). The final exchange keys on the
-    partition columns so each directory is written by tasks that own it.
+    engine-native move is the *partition-scoped rewrite* of
+    :func:`_rewrite`: only the partitions the updates land in or move
+    keys out of are read and rewritten. Untouched partitions are never
+    read OR written — at 100 TB an upsert batch touching 0.1% of
+    partitions costs 0.1% of a full rewrite, which is the entire point
+    of partitioning the target by an update-locality column (ingest
+    date, source).
 
     Unpartitioned targets degrade to a full rewrite (documented, same as
     Hive's INSERT OVERWRITE semantics) — partition the target if upserts
     are a steady workload.
     """
-    import glob as _glob
-
-    existing = bool(
-        _glob.glob(os.path.join(target, "*")) or _glob.glob(os.path.join(target, "**", "*"))
-    )
-    if not existing:
-        w = updates.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(target)
+    if not glob_status(spark, f"{target.rstrip('/')}/*"):
+        updates.write.mode("overwrite").partitionBy(*partition_by).parquet(target)
         return updates.count()
-
-    tgt = spark.read.parquet(target)
-    if partition_by:
-        # Touched = the updates' NEW partition values UNION the partitions
-        # currently holding the updated keys: an update that moves a key to
-        # a different partition value must also rewrite the OLD directory,
-        # or the superseded row survives there as a duplicate. The key
-        # lookup scans only key+partition columns (column pruning).
-        upd_keys = updates.select(*key_cols).distinct()
-        touched = (
-            updates.select(*partition_by)
-            .unionByName(
-                tgt.join(F.broadcast(upd_keys), list(key_cols), "left_semi").select(*partition_by)
-            )
-            .distinct()
-        )
-        # partition pruning: the semi join narrows the target scan to the
-        # touched directories (tiny broadcast of partition values)
-        scoped = tgt.join(F.broadcast(touched), list(partition_by), "left_semi")
-    else:
-        scoped = tgt
-    keep = scoped.join(
-        F.broadcast(updates.select(*key_cols).distinct()), list(key_cols), "left_anti"
-    )
-    merged = keep.select(*updates.columns).unionAll(updates)
-    # A key moving OUT may empty its old partition entirely; dynamic
-    # overwrite only rewrites partitions present in the staged frame, so
-    # snapshot the touched partitions' current files for post-write cleanup.
-    old_files = (
-        _partition_files(spark, target, partition_by, [tuple(r) for r in touched.collect()])
-        if partition_by
-        else []
-    )
-    # The merged plan READS the target — materialize it to a staging dir
-    # before overwriting, or the write would consume the files it is
-    # replacing. The staging write holds only the touched partitions'
-    # worth of data, so this is small relative to the target.
-    staging = target.rstrip("/") + ".staging-merge"
-    merged.write.mode("overwrite").parquet(staging)
-    staged = spark.read.parquet(staging)
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, "static")
-    try:
-        spark.conf.set(mode_key, "dynamic")
-        w = staged.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(target)
-    finally:
-        spark.conf.set(mode_key, prev)
-    _remove_stale_files(old_files)
-    n = staged.count()
-    import shutil as _shutil
-
-    _shutil.rmtree(staging, ignore_errors=True)
-    return n
-
-
-def _partition_files(
-    spark: SparkSession,
-    target: str,
-    partition_by: Sequence[str],
-    touched_rows: Sequence,
-) -> list[str]:
-    """Local filesystem paths of every parquet file in the touched
-    partitions — collected BEFORE a rewrite so emptied partitions can be
-    cleaned after. Metadata-scale: one path string per file, not per row,
-    over the touched slice only (the partition-value predicate prunes the
-    listing). A fresh single-source scan, because input_file_name() is
-    rejected on multi-source (joined) plans. (Local-FS form of what a
-    Hadoop FileSystem.listStatus pass does on HDFS/S3.)"""
-    from urllib.parse import unquote, urlparse
-
-    if not touched_rows:
-        return []
-    pred = None
-    for row in touched_rows:
-        c = None
-        for col, val in zip(partition_by, row):
-            e = F.col(col) == F.lit(val)
-            c = e if c is None else c & e
-        pred = c if pred is None else pred | c
-    return [
-        unquote(urlparse(r[0]).path)
-        for r in spark.read.parquet(target)
-        .filter(pred)
-        .select(F.input_file_name())
-        .distinct()
-        .collect()
-    ]
-
-
-def _remove_stale_files(old_files: Sequence[str]) -> None:
-    """Delete pre-rewrite files that survived a dynamic partition
-    overwrite. Partitions that received staged rows had their files
-    replaced (the old names are gone — skipped here); a partition whose
-    every row was removed appears in no staged row, so dynamic overwrite
-    never touches its directory and its old files must go explicitly, or
-    the deleted rows silently survive."""
-    for f in old_files:
-        if os.path.isfile(f):
-            os.remove(f)
+    return _rewrite(spark, target, updates.select(*key_cols), updates, partition_by)[1]
 
 
 def delete_keys(
@@ -420,58 +296,133 @@ def delete_keys(
 ) -> int:
     """Row-level DELETE on a parquet dataset (the right-to-be-forgotten /
     retention-expiry primitive): rows matching ``keys`` are removed by
-    rewriting ONLY the partitions that contain them. Returns the number
-    of rows deleted.
-
-    Same partition-scoped shape as :func:`merge_upsert`: locate the
-    touched partitions (one semi join of the partition values against
-    the target scan — when the key is not the partition column, the
-    touched set comes from scanning just the key+partition columns),
-    anti-join the doomed keys out, rewrite those directories under
-    dynamic partitionOverwriteMode. Untouched partitions keep their
+    rewriting ONLY the partitions that contain them (:func:`_rewrite`).
+    Returns the number of rows deleted. Untouched partitions keep their
     files byte-for-byte — a deletion request touching one user costs
-    one partition rewrite, not a table rewrite. A partition emptied of
-    ALL its rows ends as an empty-but-present directory: dynamic
-    overwrite only rewrites partitions the staged frame still has rows
-    for, so the emptied directory's old files are deleted explicitly
-    (their paths are snapshotted from the scoped scan before the write —
-    without that step the doomed rows would silently survive).
-    """
-    tgt = spark.read.parquet(target)
-    if partition_by:
-        touched = (
-            tgt.join(F.broadcast(keys.select(*key_cols).distinct()), list(key_cols), "left_semi")
-            .select(*partition_by)
-            .distinct()
-        )
-        scoped = tgt.join(F.broadcast(touched), list(partition_by), "left_semi")
-    else:
-        scoped = tgt
-    before = scoped.count()
-    old_files = (
-        _partition_files(spark, target, partition_by, [tuple(r) for r in touched.collect()])
-        if partition_by
-        else []
-    )
-    keep = scoped.join(
-        F.broadcast(keys.select(*key_cols).distinct()), list(key_cols), "left_anti"
-    )
-    staging = target.rstrip("/") + ".staging-delete"
-    keep.write.mode("overwrite").parquet(staging)
-    staged = spark.read.parquet(staging)
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, "static")
-    try:
-        spark.conf.set(mode_key, "dynamic")
-        w = staged.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(target)
-    finally:
-        spark.conf.set(mode_key, prev)
-    _remove_stale_files(old_files)
-    deleted = before - staged.count()
-    import shutil as _shutil
+    one partition rewrite, not a table rewrite."""
+    return _rewrite(spark, target, keys.select(*key_cols), None, partition_by)[0]
 
-    _shutil.rmtree(staging, ignore_errors=True)
-    return deleted
+
+def _rewrite(
+    spark: SparkSession,
+    target: str,
+    keys: DataFrame,
+    rows: DataFrame | None,
+    partition_by: Sequence[str],
+) -> tuple[int, int]:
+    """Partition-scoped rewrite of the parquet table at ``target``: drop
+    the rows holding ``keys`` from the touched partitions, union the new
+    ``rows`` (None for a delete), and overwrite just those partitions.
+    Returns (rows dropped, rows written).
+
+    - The touched partitions' data files are listed BEFORE the write; the
+      rewrite reads exactly those files, so the rows it drops and keeps
+      come from one snapshot.
+    - The merged frame reads the target, so it is staged in a sibling
+      directory first; a write may not consume the files it replaces.
+    - The overwrite is dynamic for this write only, so it replaces only
+      the partitions that have staged rows and changes no session setting
+      another write could see.
+    - A partition whose every row was dropped has no staged row, so the
+      overwrite never touches it: the listed files that survive the write
+      are deleted, or the dropped rows silently stay.
+    """
+    table = spark.read.parquet(target)
+    dirs, dropped = _touched_partitions(spark, table, keys, rows, partition_by)
+    root = target.rstrip("/")
+    old = [
+        f"{part}/{rel}"
+        for part in (f"{root}/{d}" if d else root for d in dirs)
+        for rel, _ in _data_files(spark, part)
+    ]
+    kept = _read_files(spark, target, table.schema, old).join(
+        F.broadcast(keys), keys.columns, "left_anti"
+    )
+    merged = kept if rows is None else kept.select(*rows.columns).unionAll(rows)
+    staging = root + ".staging"
+    merged.write.mode("overwrite").parquet(staging)
+    staged = spark.read.schema(merged.schema).parquet(staging)
+    (
+        staged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(target)
+    )
+    written = staged.count()
+    fs, _ = _fs(spark, target)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    for f in old:
+        fs.delete(jpath(f), False)
+    fs.delete(jpath(staging), True)
+    return dropped, written
+
+
+def _touched_partitions(
+    spark: SparkSession,
+    table: DataFrame,
+    keys: DataFrame,
+    rows: DataFrame | None,
+    partition_by: Sequence[str],
+) -> tuple[list[str], int]:
+    """The partitions a keyed rewrite of ``table`` touches, as directory
+    names relative to the table root (Spark's own ``col=value`` escaping),
+    and the number of rows that hold ``keys``.
+
+    Touched = the new ``rows``' partitions (None for a delete) plus the
+    partitions now holding ``keys``: an update that moves a key to another
+    partition value must also rewrite the OLD directory, or the superseded
+    row survives there. One aggregation over the key and partition columns
+    (column pruning); an unpartitioned table is the one directory ``""``.
+    """
+    # semi and anti joins ignore duplicate keys: no distinct (a shuffle)
+    held = table.join(F.broadcast(keys), keys.columns, "left_semi").select(
+        *partition_by, F.lit(1).alias("_held")
+    )
+    if rows is not None:
+        held = held.unionByName(rows.select(*partition_by, F.lit(0).alias("_held")))
+    found = (
+        held.groupBy(*[F.col(c).cast("string").alias(c) for c in partition_by])
+        .agg(F.sum("_held").alias("_held"))
+        .collect()
+    )
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    dirs = ["/".join(utils.getPartitionPathString(c, r[c]) for c in partition_by) for r in found]
+    return dirs, sum(r["_held"] or 0 for r in found)
+
+
+def _read_files(spark: SparkSession, base: str, schema, files: Sequence[str]) -> DataFrame:
+    """The rows of the table at ``base`` held in ``files``, typed by the
+    table's ``schema`` (partition values come from the paths under
+    ``base``); empty when there is no file."""
+    if not files:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).option("basePath", base).parquet(*files)
+
+
+def _data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
+    """(path relative to ``path``, bytes) of every data file under
+    ``path``, listed through its Hadoop FileSystem; names starting with
+    ``_`` or ``.`` are skipped at any depth, as Spark's readers skip them.
+    Empty when ``path`` does not exist."""
+    fs, root = _fs(spark, path)
+    if not fs.exists(root):
+        return []
+    prefix = fs.makeQualified(root).toString().rstrip("/") + "/"
+    found = fs.listFiles(root, True)
+    out = []
+    while found.hasNext():
+        status = found.next()
+        rel = status.getPath().toString()[len(prefix):]
+        if not any(name.startswith(("_", ".")) for name in rel.split("/")):
+            out.append((rel, status.getLen()))
+    return out
+
+
+def _write_text(spark: SparkSession, path: str, text: str) -> None:
+    """Create (or replace) the file ``path`` holding ``text``."""
+    fs, jpath = _fs(spark, path)
+    out = fs.create(jpath, True)
+    try:
+        out.write(bytearray(text.encode()))
+    finally:
+        out.close()

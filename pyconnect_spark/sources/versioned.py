@@ -23,9 +23,17 @@ partition-column inference), so
   - **rollback**: ``vt_rollback`` commits a NEW version whose manifest
     equals the target's — history is never erased, so the bad version
     remains auditable (the Delta RESTORE semantic);
-  - **atomic commit**: the manifest lands via write-temp + ``os.rename``
-    (atomic on POSIX), so readers see either the old or the new version,
-    never a partial list.
+  - **atomic commit**: the manifest is written under a temp name and
+    renamed to ``v{N}.json`` through the table's Hadoop FileSystem, so
+    readers see either the old or the new version, never a partial list
+    (on ``s3a:`` the rename is a copy of the one object, which S3 also
+    publishes whole).
+
+Every list, read, write and rename goes through the root's Hadoop
+FileSystem (``file:``, ``hdfs:``, ``s3a:``, ``viewfs:``). A merge stages
+its new files under ``<root>/_staging-v{N}`` on that FileSystem, so
+moving them into ``data/`` is a rename (on ``s3a:``, a copy of each
+object), never a copy between filesystems.
 
 At 100 TB the economics are the same as any log-structured table
 format: a merge touching 0.1% of partitions writes 0.1% of the data and
@@ -37,42 +45,44 @@ vacuuming old versions is manifest set-difference (not implemented here
 
 Partition values must round-trip through ``<col>=<value>`` directory
 names verbatim (true for this repo's fixtures; values needing hive
-percent-escaping raise ``NotImplementedError`` rather than silently
-corrupting the touched-partition computation).
+percent-escaping raise ``NotImplementedError`` rather than landing in
+escaped directory names).
 """
 
 from __future__ import annotations
 
 import json
-import os
-import shutil
-import tempfile
+import posixpath
+import re
 import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_ESCAPE_NEEDED = set('"#%\'*/:=?\\{[]^\x7f') | {chr(c) for c in range(32)}
+from pyconnect_spark.sources.layout import (
+    _data_files,
+    _read_files,
+    _touched_partitions,
+    _write_text,
+)
+from pyconnect_spark.streaming.epoch import _fs, glob_status
+
+_VERSION = re.compile(r"v(\d+)\.json")
 
 
 def _data_dir(root: str) -> str:
-    return os.path.join(root, "data")
+    return f"{root.rstrip('/')}/data"
 
 
 def _manifest_dir(root: str) -> str:
-    return os.path.join(root, "_versions")
+    return f"{root.rstrip('/')}/_versions"
 
 
 def vt_versions(root: str) -> list[int]:
-    d = _manifest_dir(root)
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        int(f[1:-5])
-        for f in os.listdir(d)
-        if f.startswith("v") and f.endswith(".json")
-    )
+    statuses = glob_status(SparkSession.active(), f"{_manifest_dir(root)}/v*.json")
+    found = (_VERSION.fullmatch(s.getPath().getName()) for s in statuses)
+    return sorted(int(m.group(1)) for m in found if m)
 
 
 def vt_latest(root: str) -> int:
@@ -83,27 +93,26 @@ def vt_latest(root: str) -> int:
 
 
 def _read_manifest(root: str, version: int) -> list[str]:
-    with open(os.path.join(_manifest_dir(root), f"v{version}.json")) as fh:
-        return json.load(fh)["files"]
+    spark = SparkSession.active()
+    fs, path = _fs(spark, f"{_manifest_dir(root)}/v{version}.json")
+    stream = fs.open(path)
+    try:
+        text = bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+    finally:
+        stream.close()
+    return json.loads(text)["files"]
 
 
 def _commit(root: str, files: Sequence[str], version: int) -> int:
-    os.makedirs(_manifest_dir(root), exist_ok=True)
-    target = os.path.join(_manifest_dir(root), f"v{version}.json")
-    tmp = target + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump({"version": version, "files": sorted(files)}, fh, indent=1)
-    os.rename(tmp, target)  # atomic on POSIX: readers never see a partial list
+    spark = SparkSession.active()
+    target = f"{_manifest_dir(root)}/v{version}.json"
+    tmp = f"{target}.tmp-{uuid.uuid4().hex}"
+    _write_text(spark, tmp, json.dumps({"version": version, "files": sorted(files)}, indent=1))
+    fs, dst = _fs(spark, target)
+    # readers list only v*.json: the rename publishes the complete list
+    if not fs.rename(spark._jvm.org.apache.hadoop.fs.Path(tmp), dst):
+        raise OSError(f"could not rename {tmp} to {target}")
     return version
-
-
-def _part_dir(col: str, value) -> str:
-    s = "__HIVE_DEFAULT_PARTITION__" if value is None else str(value)
-    if any(ch in _ESCAPE_NEEDED for ch in s):
-        raise NotImplementedError(
-            f"partition value {s!r} needs hive escaping — out of scope"
-        )
-    return f"{col}={s}"
 
 
 def _stage_in(
@@ -114,38 +123,27 @@ def _stage_in(
     version: int,
 ) -> list[str]:
     """Write ``df`` into data/ under its partition dirs as immutable
-    ``v{version}-``-prefixed files; return the new files' relative paths."""
-    staging = tempfile.mkdtemp(prefix=f"vt-stage-v{version}-")
+    ``v{version}-``-prefixed files; return the new files' relative paths.
+
+    The frame is written to ``<root>/_staging-v{version}`` on the table's
+    own FileSystem, so moving each file into data/ is a rename."""
+    staging = f"{root.rstrip('/')}/_staging-v{version}"
+    fs, jstaging = _fs(spark, staging)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
     try:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(staging)
+        df.write.mode("overwrite").partitionBy(*partition_by).parquet(staging)
         out: list[str] = []
-        for dirpath, _dirs, files in os.walk(staging):
-            rel_dir = os.path.relpath(dirpath, staging)
-            for i, name in enumerate(sorted(files)):
-                if not name.endswith(".parquet"):
-                    continue
-                dst_dir = (
-                    _data_dir(root)
-                    if rel_dir == "."
-                    else os.path.join(_data_dir(root), rel_dir)
-                )
-                os.makedirs(dst_dir, exist_ok=True)
-                dst_name = f"v{version}-{i:05d}-{name}"
-                shutil.move(  # rename when same-device, copy otherwise
-                    os.path.join(dirpath, name),
-                    os.path.join(dst_dir, dst_name),
-                )
-                out.append(
-                    dst_name
-                    if rel_dir == "."
-                    else os.path.join(rel_dir, dst_name)
-                )
+        for rel, _ in _data_files(spark, staging):
+            part, name = posixpath.split(rel)
+            new = posixpath.join(part, f"v{version}-{name}")
+            dst = jpath(f"{_data_dir(root)}/{new}")
+            fs.mkdirs(dst.getParent())
+            if not fs.rename(jpath(f"{staging}/{rel}"), dst):
+                raise OSError(f"could not rename {staging}/{rel} into {_data_dir(root)}")
+            out.append(new)
         return out
     finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        fs.delete(jstaging, True)
 
 
 def vt_init(
@@ -169,7 +167,7 @@ def vt_read(
     """Read a version (latest when None) by its exact manifest file list;
     ``basePath`` preserves hive partition-column inference."""
     v = vt_latest(root) if version is None else version
-    files = [os.path.join(_data_dir(root), f) for f in _read_manifest(root, v)]
+    files = [f"{_data_dir(root)}/{f}" for f in _read_manifest(root, v)]
     return spark.read.option("basePath", _data_dir(root)).parquet(*files)
 
 
@@ -183,48 +181,27 @@ def vt_merge(
 ) -> int:
     """Copy-on-write MERGE: updates replace matching keys, new keys
     insert, moved keys vanish from their old partition — all without
-    touching any committed file. Only the TOUCHED partitions' rows are
-    rewritten into new files; untouched partitions' files are shared
-    with the previous manifest verbatim."""
-    keys = list(key_cols)
+    touching any committed file. Only the TOUCHED partitions' rows
+    (``layout._touched_partitions``, the same set ``merge_upsert``
+    rewrites) go into new files; untouched partitions' files are shared
+    with the previous manifest verbatim. Unpartitioned tables are one
+    partition, so they degrade to a full rewrite."""
+    keys = updates.select(*key_cols)
     prev_v = vt_latest(root)
     prev_files = _read_manifest(root, prev_v)
     cur = vt_read(spark, root, prev_v)
-    if not partition_by:
-        # unpartitioned: full rewrite (same degradation as merge_upsert)
-        keep = cur.join(
-            F.broadcast(updates.select(*keys).distinct()), keys, "left_anti"
+    touched, _ = _touched_partitions(spark, cur, keys, updates, partition_by)
+    if any("%" in d for d in touched):
+        raise NotImplementedError(
+            f"partition directories {touched} need hive escaping — out of scope"
         )
-        new_files = _stage_in(
-            spark, root, keep.unionByName(updates), (), prev_v + 1
-        )
-        return _commit(root, new_files, prev_v + 1)
-
-    upd_keys = updates.select(*keys).distinct()
-    # touched = updates' NEW partition values UNION partitions currently
-    # holding the updated keys (a moved key must vanish from its OLD
-    # directory — the io03 cross-partition-move contract)
-    touched = (
-        updates.select(*partition_by)
-        .unionByName(
-            cur.join(F.broadcast(upd_keys), keys, "left_semi").select(
-                *partition_by
-            )
-        )
-        .distinct()
+    scoped = [f"{_data_dir(root)}/{f}" for f in prev_files if posixpath.dirname(f) in touched]
+    keep = _read_files(spark, _data_dir(root), cur.schema, scoped).join(
+        F.broadcast(keys), list(key_cols), "left_anti"
     )
-    touched_rows = touched.collect()
-    touched_dirs = {
-        os.path.join(*(_part_dir(c, r[c]) for c in partition_by))
-        for r in touched_rows
-    }
-    scoped = cur.join(F.broadcast(touched), list(partition_by), "left_semi")
-    keep = scoped.join(F.broadcast(upd_keys), keys, "left_anti")
     new_rows = keep.unionByName(updates.select(*cur.columns))
     new_files = _stage_in(spark, root, new_rows, partition_by, prev_v + 1)
-    kept_old = [
-        f for f in prev_files if os.path.dirname(f) not in touched_dirs
-    ]
+    kept_old = [f for f in prev_files if posixpath.dirname(f) not in touched]
     return _commit(root, kept_old + new_files, prev_v + 1)
 
 

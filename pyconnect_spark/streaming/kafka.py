@@ -7,11 +7,10 @@ sink. The spark-sql-kafka-0-10 jar is NOT in this image, so everything
 here is import-safe and fails with a clear message only when actually
 started; option-building is pure and unit-tested.
 
-``decode_confluent_avro``/``encode_confluent_avro`` use Spark's own
-``from_avro``/``to_avro``, which need the spark-avro jar; that jar is not
-in this image either. The codec that runs here is the package's:
-``functions/avro_codec.py``'s ``to_avro_py``/``from_avro_py``, JVM UDFs
-from the package jar with the same Confluent framing (no Python worker).
+``kafka_record_stream`` decodes Confluent-framed Avro values with the
+package's own codec, ``functions/avro_codec.py``'s ``from_avro_py``: a
+JVM UDF from the package jar (no Python worker, no spark-avro jar), so
+the decode runs wherever the Kafka source does.
 
 At scale: the Kafka source maps one Spark task per topic-partition (the
 consumer-group parallelism of the reference, but elastic), and
@@ -20,17 +19,15 @@ consumer-group parallelism of the reference, but elastic), and
 
 from __future__ import annotations
 
+import json
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyconnect_spark.config import SinkConfig, SourceConfig
-from pyconnect_spark.functions.avro import (
-    SchemaRegistryClient,
-    unwrap_confluent,
-    wrap_confluent,
-)
+from pyconnect_spark.functions.avro import avro_to_spark_type
+from pyconnect_spark.functions.avro_codec import from_avro_py
 
 
 def kafka_available(spark: SparkSession) -> bool:
@@ -77,60 +74,21 @@ def source_writer_options(config: SourceConfig) -> dict[str, str]:
     return opts
 
 
-def _require_avro(spark: SparkSession) -> None:
-    try:
-        spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-            "org.apache.spark.sql.avro.SchemaConverters"
-        )
-    except Exception as e:  # noqa: BLE001
-        raise RuntimeError(
-            "spark-avro jar not on classpath; add org.apache.spark:spark-avro "
-            "to spark.jars.packages to decode Confluent Avro"
-        ) from e
-
-
-def decode_confluent_avro(
-    spark: SparkSession, col: Column, avro_schema_json: str
-) -> Column:
-    """Confluent-framed Kafka value → struct column: strip the 5-byte
-    header (magic + schema id), then from_avro with the registry schema.
-    (from_avro expects raw Avro — the framing is the part Spark lacks.)"""
-    _require_avro(spark)
-    from pyspark.sql.avro.functions import from_avro
-
-    return from_avro(unwrap_confluent(col), avro_schema_json)
-
-
-def encode_confluent_avro(
-    spark: SparkSession, col: Column, avro_schema_json: str, schema_id: int
-) -> Column:
-    _require_avro(spark)
-    from pyspark.sql.avro.functions import to_avro
-
-    return wrap_confluent(to_avro(col, avro_schema_json), schema_id)
-
-
-def registry_schema_for_topic(
-    registry_url: str, topic: str, part: str = "value"
-) -> tuple[int, dict]:
-    """Fetch the latest schema for <topic>-key/<topic>-value (the subject
-    convention the reference's serializers use)."""
-    client = SchemaRegistryClient(registry_url)
-    return client.get_latest(f"{topic}-{part}")
-
-
 def kafka_record_stream(
     spark: SparkSession, config: SinkConfig, value_schema_json: Optional[str] = None
 ) -> DataFrame:
     """readStream from Kafka with the reference's record shape: key/value
-    (Avro-decoded when a schema is given), topic, partition, offset."""
+    (decoded from Confluent-framed Avro when the registry schema is
+    given), topic, partition, offset."""
     reader = spark.readStream.format("kafka")
     for k, v in sink_reader_options(config).items():
         reader = reader.option(k, v)
     df = reader.load()
     if value_schema_json is not None:
+        schema = json.loads(value_schema_json)
+        ddl = avro_to_spark_type(schema)[0].simpleString()
         df = df.withColumn(
-            "value", decode_confluent_avro(spark, F.col("value"), value_schema_json)
+            "value", from_avro_py(F.col("value"), schema, ddl, confluent_framed=True)
         )
     return df
 

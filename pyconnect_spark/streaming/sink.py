@@ -195,28 +195,6 @@ class RecordCallbackSink(SparkSink):
         batch.select("key", "value").foreachPartition(run_partition)
 
 
-def console_sink(df: DataFrame, *, truncate: bool = False, num_rows: int = 20):
-    """Debug sink: print each micro-batch to stdout (EXT surface:
-    'Console/memory sink'). Returns the started query."""
-    return (
-        df.writeStream.format("console")
-        .option("truncate", truncate)
-        .option("numRows", num_rows)
-        .start()
-    )
-
-
-def memory_sink(df: DataFrame, name: str, *, output_mode: str = "append"):
-    """Debug sink: materialize the stream into an in-memory table
-    queryable as ``SELECT * FROM <name>``. Returns the started query."""
-    return (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .start()
-    )
-
-
 class DlqFileSink(SparkSink):
     """Dead-letter-queue sink: per batch, rows failing a validation
     predicate are routed to a DLQ directory (JSON-lines, with the failure

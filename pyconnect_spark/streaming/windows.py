@@ -34,20 +34,6 @@ def tumbling_window_agg(
     return df.groupBy(F.window(ts_col, duration).alias("window"), *keys).agg(*aggs)
 
 
-def sliding_window_agg(
-    df: DataFrame,
-    ts_col: str,
-    duration: str,
-    slide: str,
-    keys: Sequence[str],
-    aggs: Sequence[Column],
-    watermark: Optional[str] = None,
-) -> DataFrame:
-    if watermark is not None:
-        df = df.withWatermark(ts_col, watermark)
-    return df.groupBy(F.window(ts_col, duration, slide).alias("window"), *keys).agg(*aggs)
-
-
 def session_window_agg(
     df: DataFrame,
     ts_col: str,
@@ -70,12 +56,6 @@ def stream_dedup(
     if ts_col is not None and watermark is not None:
         return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(list(keys))
     return df.dropDuplicates(list(keys))
-
-
-def with_late_data_policy(df: DataFrame, ts_col: str, allowed_lateness: str) -> DataFrame:
-    """Watermark: rows later than max(event_time) - allowed_lateness are
-    dropped from stateful operators downstream (S05)."""
-    return df.withWatermark(ts_col, allowed_lateness)
 
 
 def stream_static_enrich(

@@ -7,6 +7,8 @@ from __future__ import annotations
 import math
 import os
 import sys
+import types
+import uuid
 
 import duckdb
 import pytest
@@ -24,6 +26,22 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
 def spark():
     s = get_spark("pyconnect-spark-tests", cores=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     yield s
+
+
+@pytest.fixture()
+def viewfs(spark, tmp_path):
+    """A Hadoop ``viewfs://`` mount of ``tmp_path/mounted``, which only
+    the path's FileSystem can list, rename and delete: ``.uri`` is the
+    mount point, ``.local`` the directory behind it. Each test gets its
+    own mount table, as Hadoop caches one FileSystem per table."""
+    local = tmp_path / "mounted"
+    local.mkdir()
+    table = f"t{uuid.uuid4().hex[:12]}"
+    link = f"fs.viewfs.mounttable.{table}.link./mnt"
+    conf = spark._jsc.hadoopConfiguration()
+    conf.set(link, local.as_uri())
+    yield types.SimpleNamespace(uri=f"viewfs://{table}/mnt", local=local)
+    conf.unset(link)
 
 
 @pytest.fixture(scope="session")

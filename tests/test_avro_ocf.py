@@ -228,6 +228,44 @@ def test_avro_datasource_stream_reader_tails_directory(spark, tmp_path):
     assert drain() == set(range(12))
 
 
+def test_avro_stream_tail_reads_each_appended_file_once(spark, tmp_path):
+    """Two appends of four files each land while a stream tails the
+    directory, the first through the DataSource writer and the second
+    through write_avro. The tail's offset is an index into the name-sorted
+    listing, so every file of the later append must sort after every file
+    of the earlier one: otherwise the tail re-reads an old file and never
+    reads a new one."""
+    from pyconnect_spark.sources.avro_datasource import AvroOcfDataSource
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    schema = StructType([StructField("k", StringType()), StructField("n", LongType())])
+    d, out, ckpt = (str(tmp_path / name) for name in ("ocf", "out", "ckpt"))
+    spark.dataSource.register(AvroOcfDataSource)
+
+    def rows(lo):
+        return spark.range(lo, lo + 40, numPartitions=4).selectExpr("CAST(id AS STRING) AS k", "id AS n")
+
+    def drain():
+        (
+            spark.readStream.format("pyconnect_avro")
+            .schema(schema)
+            .load(d)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+
+    rows(0).write.format("pyconnect_avro").mode("append").save(d)
+    drain()
+    assert write_avro(rows(40), d) == 40
+    drain()
+    assert len([f for f in (tmp_path / "ocf").iterdir() if f.suffix == ".avro"]) == 8
+    assert sorted(r["n"] for r in spark.read.parquet(out).collect()) == list(range(80))
+
+
 def test_avro_stream_tail_starts_on_empty_directory(spark, tmp_path):
     """The normal tail case: the stream starts against a directory that is
     still EMPTY (the producer hasn't emitted yet). It must drain empty

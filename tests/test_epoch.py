@@ -132,18 +132,12 @@ def test_fold_replays_a_crash_after_the_promote(spark, tmp_path, monkeypatch, na
     assert _readout(spark, name, str(state)) == _twin(spark, name, (0, 1, 2), tmp_path)
 
 
-def test_fold_under_viewfs_equals_the_batch_twin(spark, tmp_path):
+def test_fold_under_viewfs_equals_the_batch_twin(spark, tmp_path, viewfs):
     """The state lives under a Hadoop ``viewfs://`` mount of a local
     directory: only the path's FileSystem can list, rename and delete it."""
-    conf = spark._jsc.hadoopConfiguration()
-    link = "fs.viewfs.mounttable.epochtest.link./state"
-    conf.set(link, (tmp_path / "mounted").as_uri())
-    try:
-        for chunk in (0, 1, 2):
-            _stage(spark, "vocab", _docs(chunk), tmp_path / "in")
-        _drain(spark, "vocab", tmp_path / "in", "viewfs://epochtest/state", tmp_path / "ck")
-        got = _readout(spark, "vocab", "viewfs://epochtest/state")
-    finally:
-        conf.unset(link)
-    assert _live(tmp_path / "mounted") == ["v=1", "v=2"]
+    for chunk in (0, 1, 2):
+        _stage(spark, "vocab", _docs(chunk), tmp_path / "in")
+    _drain(spark, "vocab", tmp_path / "in", viewfs.uri, tmp_path / "ck")
+    got = _readout(spark, "vocab", viewfs.uri)
+    assert _live(viewfs.local) == ["v=1", "v=2"]
     assert got == _twin(spark, "vocab", (0, 1, 2), tmp_path)

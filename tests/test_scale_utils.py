@@ -376,53 +376,63 @@ def test_zorder_write_tightens_file_ranges_on_both_columns(spark, tmp_path):
     assert zu + zv < avg_range_fraction(sdir, "user_id") + avg_range_fraction(sdir, "value")
 
 
+def _table_targets(tmp_path):
+    """The same table as a plain path and as a ``file://`` URI: pairs of
+    (target handed to the table-maintenance call, its local directory)."""
+    return [
+        (str(tmp_path / "tgt"), tmp_path / "tgt"),
+        ((tmp_path / "uri" / "tgt").as_uri(), tmp_path / "uri" / "tgt"),
+    ]
+
+
 def test_merge_upsert_rewrites_only_touched_partitions(spark, tmp_path):
     """MERGE semantics (update wins, new keys insert) AND the scale
     contract: directories of untouched partitions keep their original
     files byte-for-byte — the upsert's write cost tracks the touched
-    slice, not the table."""
+    slice, not the table. Same rows for a plain path and a file:// URI."""
     import glob
     import os
 
     from pyconnect_spark.sources.layout import merge_upsert
 
-    target = str(tmp_path / "tgt")
-    base = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "a", 20.0), (3, "b", 30.0), (4, "c", 40.0)],
-        "id long, part string, v double",
-    )
-    merge_upsert(spark, target, base, key_cols=["id"], partition_by=["part"])
+    for target, local in _table_targets(tmp_path):
+        base = spark.createDataFrame(
+            [(1, "a", 10.0), (2, "a", 20.0), (3, "b", 30.0), (4, "c", 40.0)],
+            "id long, part string, v double",
+        )
+        merge_upsert(spark, target, base, key_cols=["id"], partition_by=["part"])
 
-    def files_with_mtime(part):
-        return {
-            f: os.path.getmtime(f)
-            for f in glob.glob(f"{target}/part={part}/*.parquet")
+        def files_with_mtime(part):
+            return {
+                f: os.path.getmtime(f)
+                for f in glob.glob(f"{local}/part={part}/*.parquet")
+            }
+
+        before_b, before_c = files_with_mtime("b"), files_with_mtime("c")
+        assert before_b and before_c
+
+        updates = spark.createDataFrame(
+            [(2, "a", 99.0), (5, "a", 50.0)], "id long, part string, v double"
+        )
+        n = merge_upsert(spark, target, updates, key_cols=["id"], partition_by=["part"])
+
+        got = {
+            r["id"]: (r["part"], r["v"])
+            for r in spark.read.parquet(target).collect()
         }
-
-    before_b, before_c = files_with_mtime("b"), files_with_mtime("c")
-
-    updates = spark.createDataFrame(
-        [(2, "a", 99.0), (5, "a", 50.0)], "id long, part string, v double"
-    )
-    n = merge_upsert(spark, target, updates, key_cols=["id"], partition_by=["part"])
-
-    got = {
-        r["id"]: (r["part"], r["v"])
-        for r in spark.read.parquet(target).collect()
-    }
-    assert got == {
-        1: ("a", 10.0),
-        2: ("a", 99.0),  # updated
-        3: ("b", 30.0),
-        4: ("c", 40.0),
-        5: ("a", 50.0),  # inserted
-    }
-    assert n == 3  # rewritten rows = touched partition 'a' only
-    # untouched partition directories were not rewritten
-    assert files_with_mtime("b") == before_b
-    assert files_with_mtime("c") == before_c
-    # no staging residue
-    assert not glob.glob(str(tmp_path / "tgt.staging-merge"))
+        assert got == {
+            1: ("a", 10.0),
+            2: ("a", 99.0),  # updated
+            3: ("b", 30.0),
+            4: ("c", 40.0),
+            5: ("a", 50.0),  # inserted
+        }
+        assert n == 3  # rewritten rows = touched partition 'a' only
+        # untouched partition directories were not rewritten
+        assert files_with_mtime("b") == before_b
+        assert files_with_mtime("c") == before_c
+        # no staging residue
+        assert not glob.glob(f"{local}.staging*")
 
 
 def test_aqe_splits_skewed_join_partition(spark, tmp_path):
@@ -531,59 +541,61 @@ def test_dynamic_partition_pruning_on_partitioned_fact(spark, tmp_path):
 def test_delete_keys_rewrites_only_touched_partitions(spark, tmp_path):
     """Right-to-be-forgotten: deleting one user's rows rewrites only the
     partitions holding them; untouched directories keep their files
-    byte-for-byte, and the deleted keys are gone everywhere."""
+    byte-for-byte, and the deleted keys are gone everywhere. Same rows
+    for a plain path and a file:// URI."""
     import glob
     import os
 
-    from pyspark.sql import functions as F
-
     from pyconnect_spark.sources.layout import delete_keys
 
-    target = str(tmp_path / "tgt")
-    base = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "a", 2.0), (1, "b", 3.0), (3, "b", 4.0), (4, "c", 5.0)],
-        "uid long, part string, v double",
-    )
-    base.write.partitionBy("part").parquet(target)
+    for target, local in _table_targets(tmp_path):
+        base = spark.createDataFrame(
+            [(1, "a", 1.0), (2, "a", 2.0), (1, "b", 3.0), (3, "b", 4.0), (4, "c", 5.0)],
+            "uid long, part string, v double",
+        )
+        base.write.partitionBy("part").parquet(target)
 
-    def files(part):
-        return {
-            f: os.path.getmtime(f)
-            for f in glob.glob(f"{target}/part={part}/*.parquet")
-        }
+        def files(part):
+            return {
+                f: os.path.getmtime(f)
+                for f in glob.glob(f"{local}/part={part}/*.parquet")
+            }
 
-    before_c = files("c")
-    doomed = spark.createDataFrame([(1,)], "uid long")
-    n = delete_keys(spark, target, doomed, key_cols=["uid"], partition_by=["part"])
-    assert n == 2  # uid=1 appeared in partitions a and b
+        before_c = files("c")
+        assert before_c
+        doomed = spark.createDataFrame([(1,)], "uid long")
+        n = delete_keys(spark, target, doomed, key_cols=["uid"], partition_by=["part"])
+        assert n == 2  # uid=1 appeared in partitions a and b
 
-    left = {(r["uid"], r["part"]) for r in spark.read.parquet(target).collect()}
-    assert left == {(2, "a"), (3, "b"), (4, "c")}
-    assert files("c") == before_c  # partition c never touched
-    assert not glob.glob(str(tmp_path / "tgt.staging-delete"))
+        left = {(r["uid"], r["part"]) for r in spark.read.parquet(target).collect()}
+        assert left == {(2, "a"), (3, "b"), (4, "c")}
+        assert files("c") == before_c  # partition c never touched
+        assert not glob.glob(f"{local}.staging*")
 
 
 def test_delete_keys_empties_whole_partition(spark, tmp_path):
     """Deleting EVERY key of a partition must actually remove its rows:
     dynamic partitionOverwriteMode never rewrites a partition the staged
     frame has no rows for, so the emptied directory's old files must be
-    cleaned explicitly — the exact right-to-be-forgotten gap case."""
+    cleaned explicitly — the exact right-to-be-forgotten gap case. Same
+    for a plain path and a file:// URI."""
     import glob
 
     from pyconnect_spark.sources.layout import delete_keys
 
-    target = str(tmp_path / "tgt")
-    base = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0), (4, "c", 4.0)],
-        "uid long, part string, v double",
-    )
-    base.write.partitionBy("part").parquet(target)
-    doomed = spark.createDataFrame([(1,), (2,)], "uid long")
-    n = delete_keys(spark, target, doomed, key_cols=["uid"], partition_by=["part"])
-    assert n == 2
-    left = {(r["uid"], r["part"]) for r in spark.read.parquet(target).collect()}
-    assert left == {(3, "b"), (4, "c")}  # partition a fully gone from reads
-    assert not glob.glob(f"{target}/part=a/*.parquet")  # files physically removed
+    for target, local in _table_targets(tmp_path):
+        base = spark.createDataFrame(
+            [(1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0), (4, "c", 4.0)],
+            "uid long, part string, v double",
+        )
+        base.write.partitionBy("part").parquet(target)
+        doomed = spark.createDataFrame([(1,), (2,)], "uid long")
+        n = delete_keys(spark, target, doomed, key_cols=["uid"], partition_by=["part"])
+        assert n == 2
+        left = {(r["uid"], r["part"]) for r in spark.read.parquet(target).collect()}
+        assert left == {(3, "b"), (4, "c")}  # partition a fully gone from reads
+        assert not glob.glob(f"{local}/part=a/*.parquet")  # files physically removed
+        assert not glob.glob(f"{local}.staging*")
 
 
 def test_merge_upsert_key_moving_partitions_leaves_no_duplicate(spark, tmp_path):
@@ -591,10 +603,37 @@ def test_merge_upsert_key_moving_partitions_leaves_no_duplicate(spark, tmp_path)
     row from the old directory, not just write the new one — `touched`
     must include the partitions currently holding the updated keys. Also
     covers the emptied-old-partition case (id=4 was partition d's only
-    row)."""
+    row). Same rows for a plain path and a file:// URI."""
     from pyconnect_spark.sources.layout import merge_upsert
 
-    target = str(tmp_path / "tgt")
+    for target, _ in _table_targets(tmp_path):
+        base = spark.createDataFrame(
+            [(1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0), (4, "d", 4.0)],
+            "id long, part string, v double",
+        )
+        merge_upsert(spark, target, base, key_cols=["id"], partition_by=["part"])
+        updates = spark.createDataFrame(
+            [(3, "c", 33.0), (4, "a", 44.0)], "id long, part string, v double"
+        )
+        merge_upsert(spark, target, updates, key_cols=["id"], partition_by=["part"])
+        got = {r["id"]: (r["part"], r["v"]) for r in spark.read.parquet(target).collect()}
+        assert got == {
+            1: ("a", 1.0),
+            2: ("a", 2.0),
+            3: ("c", 33.0),  # moved b -> c, no stale b row
+            4: ("a", 44.0),  # moved d -> a; partition d emptied
+        }
+        n_rows = spark.read.parquet(target).count()
+        assert n_rows == 4  # no duplicates anywhere
+
+
+def test_merge_upsert_under_viewfs(spark, viewfs):
+    """A ``viewfs://`` table that Python's ``os`` cannot open: the upsert
+    lists, stages and deletes through the mount and ends with the rows
+    of the plain-path case."""
+    from pyconnect_spark.sources.layout import merge_upsert
+
+    target = f"{viewfs.uri}/tgt"
     base = spark.createDataFrame(
         [(1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0), (4, "d", 4.0)],
         "id long, part string, v double",
@@ -603,16 +642,47 @@ def test_merge_upsert_key_moving_partitions_leaves_no_duplicate(spark, tmp_path)
     updates = spark.createDataFrame(
         [(3, "c", 33.0), (4, "a", 44.0)], "id long, part string, v double"
     )
-    merge_upsert(spark, target, updates, key_cols=["id"], partition_by=["part"])
+    n = merge_upsert(spark, target, updates, key_cols=["id"], partition_by=["part"])
     got = {r["id"]: (r["part"], r["v"]) for r in spark.read.parquet(target).collect()}
-    assert got == {
-        1: ("a", 1.0),
-        2: ("a", 2.0),
-        3: ("c", 33.0),  # moved b -> c, no stale b row
-        4: ("a", 44.0),  # moved d -> a; partition d emptied
-    }
-    n_rows = spark.read.parquet(target).count()
-    assert n_rows == 4  # no duplicates anywhere
+    assert got == {1: ("a", 1.0), 2: ("a", 2.0), 3: ("c", 33.0), 4: ("a", 44.0)}
+    assert n == 4  # partitions a (three rows) and c; b and d emptied
+    assert sorted(p.name for p in viewfs.local.iterdir()) == ["tgt"]  # no staging residue
+
+
+def test_table_maintenance_leaves_the_session_overwrite_mode_alone(spark, tmp_path, monkeypatch):
+    """merge_upsert and delete_keys set dynamic overwrite on their own
+    write only: a session-wide change would leak into any write running
+    beside them, such as a CDC stream's neighbour."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from pyconnect_spark.sources.layout import delete_keys, merge_upsert
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    touched = []
+    for name in ("set", "unset"):
+        real = getattr(RuntimeConfig, name)
+
+        def record(self, k, *args, _real=real):
+            touched.append(k)
+            return _real(self, k, *args)
+
+        monkeypatch.setattr(RuntimeConfig, name, record)
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")  # not the default
+    touched.clear()
+    try:
+        target = str(tmp_path / "tgt")
+        base = spark.createDataFrame(
+            [(1, "a", 1.0), (2, "b", 2.0)], "id long, part string, v double"
+        )
+        merge_upsert(spark, target, base, key_cols=["id"], partition_by=["part"])
+        merge_upsert(spark, target, base, key_cols=["id"], partition_by=["part"])
+        delete_keys(spark, target, base.select("id"), key_cols=["id"], partition_by=["part"])
+        assert key not in touched
+        assert spark.conf.get(key) == "dynamic"
+    finally:
+        monkeypatch.undo()
+        spark.conf.set(key, prev)
 
 
 def test_zorder_value_clamps_below_stats_lo(spark):

@@ -1469,7 +1469,7 @@ def test_s28_streaming_cdc_apply_via_merge_upsert(spark, tmp_path):
         3: ("b", 30.0),
         4: ("c", 40.0),
     }
-    assert not glob.glob(str(tmp_path / "cdc-target.staging-merge"))
+    assert not glob.glob(str(tmp_path / "cdc-target.staging*"))
 
 
 def _neardup_drops_later_copies(spark, tmp_path, store):

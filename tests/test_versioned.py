@@ -23,15 +23,27 @@ from pyconnect_spark.sources.versioned import (
 )
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
-    root = str(tmp_path / "vt")
+def _init(spark, root):
     base = spark.createDataFrame(
         [(1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0), (4, "c", 4.0)],
         "k long, part string, v double",
     )
     vt_init(spark, root, base, partition_by=["part"])
     return root
+
+
+@pytest.fixture()
+def table(spark, tmp_path):
+    return _init(spark, str(tmp_path / "vt"))
+
+
+@pytest.fixture()
+def tables(spark, tmp_path):
+    """The same fresh table at a plain path and at a ``file://`` URI."""
+    return [
+        _init(spark, str(tmp_path / "vt")),
+        _init(spark, (tmp_path / "uri" / "vt").as_uri()),
+    ]
 
 
 def _rows(spark, root, version=None):
@@ -41,49 +53,52 @@ def _rows(spark, root, version=None):
     )
 
 
-def test_time_travel_preserves_old_version(spark, table):
+def test_time_travel_preserves_old_version(spark, tables):
     updates = spark.createDataFrame(
         [(2, "a", 20.0), (5, "b", 50.0)], "k long, part string, v double"
     )
-    vt_merge(spark, table, updates, key_cols=["k"], partition_by=["part"])
-    assert _rows(spark, table, 1) == [
-        (1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0), (4, "c", 4.0),
-    ]
-    assert _rows(spark, table, 2) == [
-        (1, "a", 1.0), (2, "a", 20.0), (3, "b", 3.0), (4, "c", 4.0),
-        (5, "b", 50.0),
-    ]
-    assert _rows(spark, table) == _rows(spark, table, 2)  # latest = newest
+    for table in tables:
+        vt_merge(spark, table, updates, key_cols=["k"], partition_by=["part"])
+        assert _rows(spark, table, 1) == [
+            (1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0), (4, "c", 4.0),
+        ]
+        assert _rows(spark, table, 2) == [
+            (1, "a", 1.0), (2, "a", 20.0), (3, "b", 3.0), (4, "c", 4.0),
+            (5, "b", 50.0),
+        ]
+        assert _rows(spark, table) == _rows(spark, table, 2)  # latest = newest
 
 
-def test_cow_shares_untouched_partition_files(spark, table):
+def test_cow_shares_untouched_partition_files(spark, tables):
     updates = spark.createDataFrame(
         [(2, "a", 20.0)], "k long, part string, v double"
     )
-    vt_merge(spark, table, updates, key_cols=["k"], partition_by=["part"])
-    m1, m2 = set(_read_manifest(table, 1)), set(_read_manifest(table, 2))
-    shared = m1 & m2
-    # partitions b and c untouched: their v1 files appear in BOTH
-    # manifests verbatim; partition a's v1 files are only in v1
-    assert {os.path.dirname(f) for f in shared} == {"part=b", "part=c"}
-    assert all(os.path.dirname(f) == "part=a" for f in m1 - m2)
-    assert all(os.path.dirname(f) == "part=a" for f in m2 - m1)
+    for table in tables:
+        vt_merge(spark, table, updates, key_cols=["k"], partition_by=["part"])
+        m1, m2 = set(_read_manifest(table, 1)), set(_read_manifest(table, 2))
+        shared = m1 & m2
+        # partitions b and c untouched: their v1 files appear in BOTH
+        # manifests verbatim; partition a's v1 files are only in v1
+        assert {os.path.dirname(f) for f in shared} == {"part=b", "part=c"}
+        assert all(os.path.dirname(f) == "part=a" for f in m1 - m2)
+        assert all(os.path.dirname(f) == "part=a" for f in m2 - m1)
 
 
-def test_cross_partition_key_move_empties_old_directory(spark, table):
+def test_cross_partition_key_move_empties_old_directory(spark, tables):
     # k=4 moves c -> a; partition c becomes EMPTY: its old files must
     # leave the manifest even though no new file lands in c
     updates = spark.createDataFrame(
         [(4, "a", 40.0)], "k long, part string, v double"
     )
-    vt_merge(spark, table, updates, key_cols=["k"], partition_by=["part"])
-    assert _rows(spark, table) == [
-        (1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0), (4, "a", 40.0),
-    ]
-    assert not any(
-        f.startswith("part=c") for f in _read_manifest(table, 2)
-    )
-    assert _rows(spark, table, 1)[-1] == (4, "c", 4.0)  # history intact
+    for table in tables:
+        vt_merge(spark, table, updates, key_cols=["k"], partition_by=["part"])
+        assert _rows(spark, table) == [
+            (1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0), (4, "a", 40.0),
+        ]
+        assert not any(
+            f.startswith("part=c") for f in _read_manifest(table, 2)
+        )
+        assert _rows(spark, table, 1)[-1] == (4, "c", 4.0)  # history intact
 
 
 def test_rollback_is_a_new_auditable_version(spark, table):
@@ -101,8 +116,10 @@ def test_rollback_is_a_new_auditable_version(spark, table):
 def test_manifest_commit_is_atomic_rename(spark, table):
     # no partially-written manifest may ever be visible under the
     # version naming scheme: temp files use a .tmp suffix outside it
+    # (the local FileSystem's hidden .crc checksum files are not manifests)
     d = os.path.join(table, "_versions")
-    names = os.listdir(d)
+    names = [n for n in os.listdir(d) if not n.startswith(".")]
+    assert names
     assert all(n.endswith(".json") for n in names)
     for n in names:
         with open(os.path.join(d, n)) as fh:
