@@ -63,6 +63,7 @@ example:
 	python examples/event_analytics.py
 	python examples/dedup_at_scale.py
 	python examples/table_maintenance.py
+	python examples/streaming_ingest.py
 
 lint:
 	python -m compileall -q pyconnect_spark tests bench.py __spark_entry__.py

@@ -99,10 +99,7 @@ def encode(value: Any, schema: Any, buf: io.BytesIO | None = None) -> bytes:
     schema = _unwrap(schema)
     out = buf or io.BytesIO()
     if isinstance(schema, list):  # union — nullable only, like inference
-        # pandas renders a null in a numeric struct field as NaN (int64 →
-        # float64 coercion inside the Arrow batch), so NaN in a union
-        # position means SQL NULL, not the IEEE value.
-        if value is None or (isinstance(value, float) and value != value):
+        if value is None:
             idx = schema.index("null")
             _encode_long(out, idx)
         else:

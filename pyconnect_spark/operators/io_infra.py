@@ -60,7 +60,8 @@ def _staging(spark: SparkSession, tag: str, sf_dir: str) -> str:
     "entire data plane is Avro records — schema inference "
     "avroparser.py:12-105, serialize pyconnectsource.py:163-196): the "
     "supplier table is written through df.write.format('pyconnect_avro') "
-    "(one OCF container per partition, the jar-free pure-Python codec) "
+    "(sources/avro_ocf.py: one OCF container per partition, published by "
+    "the job commit, on the jar-free pure-Python codec) "
     "and read back through the registered Spark 4 Python DataSource "
     "(schema probed from the first container header, one InputPartition "
     "per file), then aggregated. The oracle computes the same aggregate "
@@ -73,7 +74,7 @@ def _staging(spark: SparkSession, tag: str, sf_dir: str) -> str:
     tags=("io", "avro", "datasource", "roundtrip", "ref-parity"),
 )
 def io01(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyconnect_spark.sources.avro_datasource import AvroOcfDataSource
+    from pyconnect_spark.sources.avro_ocf import AvroOcfDataSource
 
     spark.dataSource.register(AvroOcfDataSource)
     out = _staging(spark, "io01", sf_dir)

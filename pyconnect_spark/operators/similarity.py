@@ -195,46 +195,6 @@ def sm04(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def assign_cells(df: DataFrame, centroids: np.ndarray, emb_col: str = "embedding") -> DataFrame:
-    """IVF assignment: nearest centroid per vector (one Arrow-batched
-    matmul against the L2-normalized centroid matrix). ``centroids`` is
-    tiny (n_cells × dim) and ships in the UDF closure."""
-    from pyspark.sql.functions import pandas_udf
-
-    cnorm = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    cnorm_t = cnorm.T.astype(np.float64)
-
-    @pandas_udf("long")
-    def cell_udf(embs: pd.Series) -> pd.Series:
-        mat = np.vstack(embs.to_numpy()).astype(np.float64)
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(mat @ cnorm_t, axis=1).astype(np.int64))
-
-    return df.withColumn("cell", cell_udf(F.col(emb_col)))
-
-
-def probe_cells(df: DataFrame, centroids: np.ndarray, n_probe: int, emb_col: str = "embedding") -> DataFrame:
-    """Query-side IVF probe list: the ``n_probe`` nearest centroid cells
-    per vector (FAISS's nprobe) as an ``array<long>`` column ``cells``.
-    Probing one cell misses neighbors that fall just across a Voronoi
-    boundary — measured recall@5 was 0.16 with n_probe=1 on the fixture."""
-    from pyspark.sql.functions import pandas_udf
-
-    cnorm = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    cnorm_t = cnorm.T.astype(np.float64)
-    p = min(n_probe, centroids.shape[0])
-
-    @pandas_udf("array<long>")
-    def cells_udf(embs: pd.Series) -> pd.Series:
-        mat = np.vstack(embs.to_numpy()).astype(np.float64)
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        sims = mat @ cnorm_t
-        top = np.argsort(-sims, axis=1)[:, :p].astype(np.int64)
-        return pd.Series(list(top))
-
-    return df.withColumn("cells", cells_udf(F.col(emb_col)))
-
-
 # Round-4 sweep at sf0.1 (tools/ann_tune.py + numpy replication): with the
 # fixture's 10 natural label cells, recall@5 = 0.80/0.84/0.88/0.96 at
 # n_probe = 4/5/6/8 (candidate fraction 0.39/0.50/0.59/0.80). A finer
@@ -476,8 +436,8 @@ def ivf_ranked_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     "at 8 — see the sweep note on _SM05_N_PROBE). At "
     "100 TB the corpus is written partitioned by cell so a query touches "
     "n_probe partitions, and with thousands of cells the assignment "
-    "switches to the Arrow-batched BLAS matmul (assign_cells/probe_cells "
-    "helpers) — same cells up to float-ulp ties, chosen per deployment.",
+    "calls for a batched matmul kernel (a Java UDF, like the sign-bit "
+    "LSH keys) — same cells up to float-ulp ties, chosen per deployment.",
     tags=("similarity", "llm", "ann", "ivf"),
 )
 def sm05(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3286,8 +3246,8 @@ _SM25_D9 = """round(
     "window), one (k x d)-row centroid agg between them, k-row output. "
     "At 100 TB each extra Lloyd round is one more linear pass — "
     "mini-batch on a deterministic hash-sample is the documented "
-    "escape hatch, and at large k the assignment switches to the "
-    "Arrow matmul exactly like sm05's assign_cells note.",
+    "escape hatch, and at large k the assignment calls for the same "
+    "batched matmul kernel as sm05's note.",
     tags=("similarity", "llm", "kmeans", "quantizer", "iterative"),
 )
 def sm25(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,7 +25,7 @@ per batch from parquet (or pinned with a broadcast hint, as here).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 _TOKEN_RE = r"\s+"
@@ -70,9 +70,11 @@ def decontam_gate_batch(
         .select("doc_id")
         .distinct()
     )
-    accepted = batch.join(contaminated, "doc_id", "left_anti")
-    accepted.write.mode("append").parquet(accepted_dir)
-    return accepted.count()
+    written = Observation()
+    batch.join(contaminated, "doc_id", "left_anti").observe(
+        written, F.count(F.lit(1)).alias("n")
+    ).write.mode("append").parquet(accepted_dir)
+    return written.get["n"]
 
 
 def decontam_stream(

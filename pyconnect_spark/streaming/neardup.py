@@ -38,7 +38,7 @@ broadcast when batches are small), and compaction of the store is
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pyconnect_spark.operators.dedup import band_keys, minhash_signatures
@@ -78,12 +78,16 @@ def neardup_filter_batch(
     accepted_ids = bands.select("doc_id").distinct().join(losers, "doc_id", "left_anti")
     accepted = batch.join(accepted_ids, "doc_id", "left_semi")
     # Emit survivors FIRST, then claim buckets: a crash in between replays
-    # the batch and converges (see module docstring).
-    accepted.write.mode("append").parquet(accepted_dir)
+    # the batch and converges (see module docstring). The count rides the
+    # survivors' write job.
+    written = Observation()
+    accepted.observe(written, F.count(F.lit(1)).alias("n")).write.mode("append").parquet(
+        accepted_dir
+    )
     bands.join(accepted_ids, "doc_id", "left_semi").select("bhash").distinct().write.mode(
         "append"
     ).parquet(store_dir)
-    return accepted.count()
+    return written.get["n"]
 
 
 def neardup_stream(

@@ -31,7 +31,7 @@ import json
 import os
 from typing import Callable, Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
@@ -223,8 +223,6 @@ class DlqFileSink(SparkSink):
         self.n_dlq = 0
 
     def on_flush(self, batch: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         flagged = batch.withColumn("_valid", self._valid).cache()
         try:
             good = flagged.filter(F.col("_valid")).drop("_valid")
@@ -234,10 +232,16 @@ class DlqFileSink(SparkSink):
                 .withColumn("_dlq_reason", self._reason)
                 .withColumn("_dlq_epoch", F.lit(epoch_id))
             )
-            good.write.mode("append").json(self.out_path)
-            bad.write.mode("append").json(self.dlq_path)
-            self.n_good += good.count()
-            self.n_dlq += bad.count()
+            # Each count rides its own write job.
+            n_good, n_dlq = Observation(), Observation()
+            good.observe(n_good, F.count(F.lit(1)).alias("n")).write.mode("append").json(
+                self.out_path
+            )
+            bad.observe(n_dlq, F.count(F.lit(1)).alias("n")).write.mode("append").json(
+                self.dlq_path
+            )
+            self.n_good += n_good.get["n"]
+            self.n_dlq += n_dlq.get["n"]
         finally:
             flagged.unpersist()
 

@@ -1,18 +1,17 @@
 """Static guard, no JVM: every public top-level function and class in
-``pyconnect_spark/`` is named somewhere in the repo's Python files
-besides its own definition (a call, an import, a test, or a docstring
-that points at it). Query builders decorated with ``REGISTRY.register``
-are reached through the registry and count as referenced."""
+``pyconnect_spark/`` is referenced in code somewhere in the repo's Python
+files: a name, an attribute or an import alias. A word inside a string
+or a docstring does not count. Query builders decorated with
+``REGISTRY.register`` are reached through the registry and count as
+referenced."""
 
 from __future__ import annotations
 
 import ast
 import collections
 import pathlib
-import re
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
-_WORD = re.compile(r"\w+")
 
 
 def _python_files():
@@ -33,19 +32,29 @@ def _public_definitions(tree):
         yield node
 
 
+def _code_references(tree):
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id
+        elif isinstance(node, ast.Attribute):
+            yield node.attr
+        elif isinstance(node, ast.alias):
+            yield from node.name.split(".")
+
+
 def test_every_public_helper_is_named_outside_its_definition():
-    words = collections.Counter()
+    refs = collections.Counter()
     trees = {}
     for path in _python_files():
-        text = path.read_text()
-        words.update(_WORD.findall(text))
+        tree = ast.parse(path.read_text())
+        refs.update(_code_references(tree))
         if path.is_relative_to(REPO / "pyconnect_spark"):
-            trees[path] = ast.parse(text)
+            trees[path] = tree
     unreferenced = [
         f"{path.relative_to(REPO)}:{node.lineno} {node.name}"
         for path, tree in trees.items()
         for node in _public_definitions(tree)
-        if words[node.name] < 2
+        if not refs[node.name]
     ]
     assert trees
     assert not unreferenced, "unreferenced public helpers:\n" + "\n".join(unreferenced)

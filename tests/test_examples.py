@@ -12,6 +12,8 @@ import sys
 
 import pytest
 
+from tests.conftest import SF_SMALL
+
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -52,3 +54,8 @@ def test_streaming_ingest_example():
 @pytest.mark.slow
 def test_dedup_at_scale_example():
     _run("dedup_at_scale.py", "/root/testdata/sf0.001")
+
+
+@pytest.mark.slow
+def test_table_maintenance_example():
+    _run("table_maintenance.py", SF_SMALL)

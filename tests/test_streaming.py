@@ -2190,3 +2190,59 @@ def test_s28c_cdc_seq_col_compacts_intra_batch_duplicates(spark, tmp_path):
     q.awaitTermination()
     got = sorted(map(tuple, spark.read.parquet(target).select("k", "part", "v").collect()))
     assert got == [(1, "a", 5.0), (2, "b", 7.0)]
+
+
+def test_curation_gates_count_on_their_write_job(spark, tmp_path):
+    """neardup_filter_batch, decontam_gate_batch and DlqFileSink.on_flush
+    take their counts from an observation on the frame they write, not
+    from a count() that recomputes the micro-batch. Ceilings are the
+    Spark jobs per call under a unique job group; counting with
+    ``count()`` took 29, 13 and 6."""
+    from pyconnect_spark.streaming.decontam import build_eval_digests, decontam_gate_batch
+    from pyconnect_spark.streaming.neardup import neardup_filter_batch
+    from pyconnect_spark.streaming.sink import DlqFileSink
+
+    sc = spark.sparkContext
+
+    def jobs(name, call):
+        group = f"gate-jobs-{name}"
+        sc.setJobGroup(group, f"job count: {name}")
+        try:
+            result = call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    schema = "doc_id long, text string"
+    words = " ".join(f"w{i}" for i in range(60))
+    docs = spark.createDataFrame(
+        [(1, words), (2, words.replace("w7", "x")), (3, "the quick brown fox jumps over the lazy dog")],
+        schema,
+    )
+    accepted = str(tmp_path / "neardup")
+    n, n_jobs = jobs("neardup", lambda: neardup_filter_batch(docs, str(tmp_path / "store"), accepted))
+    assert n == spark.read.parquet(accepted).count() == 2 and n_jobs <= 19
+
+    digests = build_eval_digests(spark.createDataFrame([(9, "quick brown fox jumps")], schema)).persist()
+    digests.count()
+    accepted = str(tmp_path / "decontam")
+    n, n_jobs = jobs("decontam", lambda: decontam_gate_batch(docs, digests, accepted))
+    assert n == spark.read.parquet(accepted).count() == 2 and n_jobs <= 7
+    digests.unpersist()
+
+    sink = DlqFileSink(
+        spark,
+        SinkConfig(
+            bootstrap_servers="localhost:9092",
+            topics=[str(tmp_path)],
+            checkpoint_location=str(tmp_path / "ckpt"),
+        ),
+        out_path=str(tmp_path / "out"),
+        dlq_path=str(tmp_path / "dlq"),
+        valid=F.length("value") > 0,
+        reason=F.lit("empty value"),
+    )
+    batch = spark.createDataFrame([("k0", ""), ("k1", "v1"), ("k2", "v2")], "key string, value string")
+    _, n_jobs = jobs("dlq", lambda: sink.on_flush(batch, 0))
+    assert (sink.n_good, sink.n_dlq) == (2, 1) and n_jobs <= 2
