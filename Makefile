@@ -65,5 +65,7 @@ example:
 	python examples/table_maintenance.py
 	python examples/streaming_ingest.py
 
+# Byte-compile every Python file; the .pyc files go under build/, not
+# into __pycache__ folders beside the sources.
 lint:
-	python -m compileall -q pyconnect_spark tests bench.py __spark_entry__.py
+	python -X pycache_prefix=build/pycache -m compileall -q pyconnect_spark tests tools examples bench.py __spark_entry__.py

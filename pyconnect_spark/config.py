@@ -234,7 +234,6 @@ class BaseConfig(BaseModel):
     kafka_opts: Dict[str, str] = Field(default_factory=dict)
     # Spark-native additions:
     checkpoint_location: Optional[str] = None
-    shuffle_partitions: Optional[int] = None
 
     @field_validator("bootstrap_servers", mode="before")
     @classmethod

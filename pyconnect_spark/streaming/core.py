@@ -12,9 +12,11 @@ Parity with the reference's `BaseConnector`
 
 The run loop itself is Spark's ``MicroBatchExecution``: instead of a
 single-threaded ``while is_running: _run_once()`` poll loop
-(core.py:155-161), ``run()`` starts a StreamingQuery and awaits
-termination. Offset persistence/recovery (the reference's offset topic and
-consumer-commit machinery, R10/R11/R14) is the streaming checkpoint — a
+(core.py:155-161), ``run()`` starts the connector's one StreamingQuery and
+awaits its termination. This class is the only place that builds and
+awaits that query; a subclass supplies its read and its write. Offset
+persistence/recovery (the reference's offset topic and consumer-commit
+machinery, R10/R11/R14) is the streaming checkpoint — a
 strictly stronger mechanism (per-batch WAL vs commit-on-close).
 
 Semantic delta, documented deliberately: the reference forbids restarting
@@ -26,10 +28,10 @@ from __future__ import annotations
 
 import enum
 import logging
-from typing import Any, Optional
+from typing import Optional
 
-from pyspark.sql import SparkSession
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 log = logging.getLogger(__name__)
 
@@ -50,12 +52,26 @@ class PyConnectError(Exception):
 class BaseConnector:
     """Shared lifecycle for sources and sinks.
 
-    Subclasses implement :meth:`_start_query` returning a started
-    ``StreamingQuery``; hooks mirror the reference's callback protocol.
+    Subclasses implement :meth:`read_stream` and :meth:`_write` (which
+    only starts the configured writer); hooks mirror the reference's
+    callback protocol. ``stop_at_end`` drains what is available and stops
+    (``trigger(availableNow=True)``); without it the query runs until
+    :meth:`stop`.
     """
 
-    def __init__(self, spark: SparkSession, *, max_crash_restarts: int = 0):
+    def __init__(
+        self,
+        spark: SparkSession,
+        *,
+        checkpoint_location: Optional[str],
+        stop_at_end: bool = True,
+        max_crash_restarts: int = 0,
+    ):
+        if not checkpoint_location:
+            raise ValueError("checkpoint_location is required")
         self.spark = spark
+        self.checkpoint_location = checkpoint_location
+        self.stop_at_end = stop_at_end
         self.status: Status = Status.NOT_YET_RUNNING
         self.status_info: Optional[BaseException] = None
         self.max_crash_restarts = max_crash_restarts
@@ -72,12 +88,31 @@ class BaseConnector:
 
     def on_crash_during_run(self) -> Optional[Status]:
         """Called when the query crashes; return Status.RUNNING to resume
-        from the checkpoint (reference: core.py:258-269)."""
+        from the checkpoint (reference: core.py:258-269), at most
+        ``max_crash_restarts`` times. Past that the connector is CRASHED
+        and ``run()`` raises from the last error."""
         return None
 
     # ---- to implement ----
-    def _start_query(self) -> StreamingQuery:
+    def read_stream(self) -> DataFrame:
+        """The record stream."""
         raise NotImplementedError
+
+    def transform(self, df: DataFrame) -> DataFrame:
+        """Reshape records between the read and the write."""
+        return df
+
+    def _write(self, writer: DataStreamWriter) -> StreamingQuery:
+        """Start ``writer`` (checkpoint and trigger already set)."""
+        raise NotImplementedError
+
+    def _start_query(self) -> StreamingQuery:
+        writer = self.transform(self.read_stream()).writeStream.option(
+            "checkpointLocation", self.checkpoint_location
+        )
+        if self.stop_at_end:
+            writer = writer.trigger(availableNow=True)
+        return self._write(writer)
 
     # ---- lifecycle ----
     def _apply_hook(self, hook) -> None:
@@ -118,9 +153,12 @@ class BaseConnector:
                     self.status_info = e
                     log.warning("connector crashed: %s", e)
                     self._apply_hook(self.on_crash_during_run)
-                    if self.status is Status.RUNNING and restarts < self.max_crash_restarts:
-                        restarts += 1
-                        continue
+                    if self.status is Status.RUNNING:
+                        if restarts < self.max_crash_restarts:
+                            restarts += 1
+                            continue
+                        # Out of restarts: the last error stands.
+                        self.status = Status.CRASHED
                     break
         finally:
             self._apply_hook(self.on_shutdown)

@@ -84,11 +84,11 @@ def decontam_stream(
     accepted_dir: str,
     checkpoint_dir: str,
     n: int = 4,
-    available_now: bool = True,
 ):
     """Wire a (doc_id, text) stream through the decontamination gate.
-    Returns the started StreamingQuery."""
-    writer = (
+    Returns the started StreamingQuery, which drains what is available
+    and stops."""
+    return (
         stream.writeStream.outputMode("append")
         .foreachBatch(
             lambda b, _eid: decontam_gate_batch(
@@ -96,7 +96,6 @@ def decontam_stream(
             )
         )
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -24,10 +24,12 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from pyconnect_spark.config import SinkConfig, SourceConfig
 from pyconnect_spark.functions.avro import avro_to_spark_type
 from pyconnect_spark.functions.avro_codec import from_avro_py
+from pyconnect_spark.streaming.core import BaseConnector
 
 
 def kafka_available(spark: SparkSession) -> bool:
@@ -101,13 +103,13 @@ def _require_kafka(spark: SparkSession) -> None:
         )
 
 
-class KafkaSource:
+class KafkaSource(BaseConnector):
     """File/records → Kafka topic producer connector (reference
     PyConnectSource parity on a real broker: pyconnectsource.py:152-196).
 
-    Wraps a :class:`~pyconnect_spark.streaming.source.SparkSource`-shaped
-    record stream and publishes (key, value) to ``config.topic`` via the
-    Spark Kafka sink. Offset persistence = the streaming checkpoint (the
+    Publishes the (key, value) columns of ``records_df`` to
+    ``config.topic`` via the Spark Kafka sink, draining what is available
+    and stopping. Offset persistence = the streaming checkpoint (the
     reference's offset-topic replay collapses into checkpointed source
     offsets, SURVEY §2.1 R10/R11): a second run with the same checkpoint
     publishes only unseen records.
@@ -115,24 +117,18 @@ class KafkaSource:
 
     def __init__(self, spark, config: SourceConfig, records_df: DataFrame, *, checkpoint: str):
         _require_kafka(spark)
-        self.spark = spark
+        super().__init__(spark, checkpoint_location=checkpoint)
         self.config = config
         self.records_df = records_df
-        self.checkpoint = checkpoint
 
-    def run(self) -> None:
-        writer = (
-            self.records_df.selectExpr(
-                "CAST(key AS STRING) AS key", "CAST(value AS STRING) AS value"
-            )
-            .writeStream.format("kafka")
-            .option("checkpointLocation", self.checkpoint)
-            .trigger(availableNow=True)
-        )
-        for k, v in source_writer_options(self.config).items():
-            writer = writer.option(k, v)
-        q = writer.start()
-        q.awaitTermination()
+    def read_stream(self) -> DataFrame:
+        return self.records_df
+
+    def transform(self, df: DataFrame) -> DataFrame:
+        return df.selectExpr("CAST(key AS STRING) AS key", "CAST(value AS STRING) AS value")
+
+    def _write(self, writer: DataStreamWriter) -> StreamingQuery:
+        return writer.format("kafka").options(**source_writer_options(self.config)).start()
 
 
 def kafka_sink_stream(spark: SparkSession, config: SinkConfig) -> DataFrame:

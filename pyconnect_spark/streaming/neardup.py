@@ -96,17 +96,16 @@ def neardup_stream(
     store_dir: str,
     accepted_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Wire a (doc_id, text) stream through the near-dup filter.
-    Returns the started StreamingQuery."""
-    writer = (
+    Returns the started StreamingQuery, which drains what is available
+    and stops."""
+    return (
         stream.writeStream.outputMode("append")
         .foreachBatch(
             lambda b, _eid: neardup_filter_batch(b, store_dir, accepted_dir)
         )
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

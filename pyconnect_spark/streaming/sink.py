@@ -34,7 +34,7 @@ from typing import Callable, Optional
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from pyconnect_spark.config import SinkConfig
 from pyconnect_spark.streaming.core import BaseConnector
@@ -59,12 +59,14 @@ class SparkSink(BaseConnector):
         stop_at_end: bool = True,
         max_crash_restarts: int = 0,
     ):
-        super().__init__(spark, max_crash_restarts=max_crash_restarts)
+        super().__init__(
+            spark,
+            checkpoint_location=config.checkpoint_location,
+            stop_at_end=stop_at_end,
+            max_crash_restarts=max_crash_restarts,
+        )
         self.config = config
         self.schema = schema or RECORD_SCHEMA
-        self.stop_at_end = stop_at_end
-        if not config.checkpoint_location:
-            raise ValueError("SinkConfig.checkpoint_location is required")
         if not config.topics:
             raise ValueError("SinkConfig.topics is required")
 
@@ -74,27 +76,14 @@ class SparkSink(BaseConnector):
         [topic] = self.config.topics  # file mode: single topic dir
         return self.spark.readStream.schema(self.schema).json(topic)
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        return df
-
     def on_flush(self, batch: DataFrame, epoch_id: int) -> None:
         """User flush: persist the micro-batch durably. Runs to completion
         BEFORE the batch's offsets commit to the checkpoint."""
         raise NotImplementedError
 
     # ---- plumbing ----
-    def _start_query(self) -> StreamingQuery:
-        df = self.transform(self.read_stream())
-        writer = (
-            df.writeStream.option("checkpointLocation", self.config.checkpoint_location)
-            .foreachBatch(self._flush_wrapper)
-        )
-        if self.stop_at_end:
-            writer = writer.trigger(availableNow=True)
-        query = writer.start()
-        if self.stop_at_end:
-            query.awaitTermination()
-        return query
+    def _write(self, writer: DataStreamWriter) -> StreamingQuery:
+        return writer.foreachBatch(self._flush_wrapper).start()
 
     def _flush_wrapper(self, batch: DataFrame, epoch_id: int) -> None:
         # Bounded in-place flush retry, opt-in via sink_flush_retry_count

@@ -8,16 +8,17 @@ Spark-native re-expression:
 
 - the record stream is a streaming DataFrame with ``key`` / ``value``
   columns (the reference's fundamental abstraction);
-- "publish to topic" = ``writeStream`` to a topic *location* — a Kafka
-  topic when the Kafka jar + config are present, else a JSON-lines
-  directory (the file "topic" used by the reference's own examples,
-  examples/file_source/file_source.py);
+- "publish to topic" = ``writeStream`` to a topic *location*: here a
+  JSON-lines directory (the file "topic" used by the reference's own
+  examples, examples/file_source/file_source.py); streaming/kafka.py's
+  ``KafkaSource`` is the same connector writing to a Kafka topic;
 - ``seek``/``get_index``/offset-topic machinery (pyconnectsource.py:90-138,
   208-250) is the checkpoint: file sources track consumed files, Kafka
   sources track offsets, all recovered on restart automatically;
-- EOF handling (R19): ``trigger(availableNow=True)`` drains everything
-  then stops — the "stop at end of data" mode; omit it for the
-  continuous poll-forever behavior (reference default: sleep + retry,
+- EOF handling (R19): ``stop_at_end`` (``trigger(availableNow=True)``,
+  set in ``BaseConnector``) drains everything then stops — the "stop at
+  end of data" mode; ``stop_at_end=False`` is the continuous
+  poll-forever behavior (reference default: sleep + retry,
   pyconnectsource.py:198-206).
 
 JSON-lines record format parity (one object per line):
@@ -30,9 +31,8 @@ import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from pyconnect_spark.config import SourceConfig
 from pyconnect_spark.streaming.core import BaseConnector
@@ -64,11 +64,15 @@ class SparkSource(BaseConnector):
         max_crash_restarts: int = 0,
         reader_options: Optional[dict] = None,
     ):
-        super().__init__(spark, max_crash_restarts=max_crash_restarts)
+        super().__init__(
+            spark,
+            checkpoint_location=config.checkpoint_location,
+            stop_at_end=stop_at_end,
+            max_crash_restarts=max_crash_restarts,
+        )
         self.config = config
         self.input_dir = input_dir
         self.schema = schema or RECORD_SCHEMA
-        self.stop_at_end = stop_at_end
         # Micro-batch granularity / rate limiting — the Spark analogue of
         # the reference's per-message poll + need_flush() cadence knobs
         # (poll_timeout, flush-every-N): e.g. {"maxFilesPerTrigger": 1}
@@ -76,8 +80,6 @@ class SparkSource(BaseConnector):
         # everything, in bounded batches), and Kafka sources take
         # maxOffsetsPerTrigger the same way.
         self.reader_options = dict(reader_options or {})
-        if not config.checkpoint_location:
-            raise ValueError("SourceConfig.checkpoint_location is required")
 
     # ---- overridables ----
     def read_stream(self) -> DataFrame:
@@ -88,26 +90,9 @@ class SparkSource(BaseConnector):
             reader = reader.option(k, v)
         return reader.json(self.input_dir)
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        return df
-
-    # ---- plumbing ----
-    def _topic_dir(self) -> str:
+    def _write(self, writer: DataStreamWriter) -> StreamingQuery:
         # File-"topic": a directory named after the topic, JSON-lines parts.
-        return os.path.join(self.config.topic)
-
-    def _start_query(self) -> StreamingQuery:
-        df = self.transform(self.read_stream())
-        writer = (
-            df.writeStream.option("checkpointLocation", self.config.checkpoint_location)
-            .outputMode("append")
-        )
-        if self.stop_at_end:
-            writer = writer.trigger(availableNow=True)
-        query = writer.format("json").start(self._topic_dir())
-        if self.stop_at_end:
-            query.awaitTermination()
-        return query
+        return writer.format("json").start(self.config.topic)
 
 
 class RecordsSource(SparkSource):

@@ -119,147 +119,6 @@ def running_totals_per_user(stream: DataFrame) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4.x stateful-processor API)
-# ---------------------------------------------------------------------------
-try:  # the processor API is new in Spark 4.0 and its state-server protocol
-    # needs protobuf at runtime; gate on both so environments without either
-    # still import this module (applyInPandasWithState above has no such
-    # dependency and stays the portable path).
-    import google.protobuf.descriptor  # noqa: F401  (runtime requirement)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotalsProcessor(StatefulProcessor):
-        """Per-key running (count, sum) on the modern stateful-processor
-        API. Functionally the twin of `_running_totals` above; the new API
-        gives named typed state slots (ValueState/ListState/MapState),
-        per-slot TTL, and timers — the shape production stateful operators
-        should target going forward. State lives in the state store keyed
-        by the grouping key, exactly like applyInPandasWithState.
-        """
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n long, total double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            n, total = (
-                tuple(self._totals.get()) if self._totals.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    def running_totals_tws(stream: DataFrame) -> DataFrame:
-        """running_totals_per_user on transformWithStateInPandas."""
-        return stream.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=RunningTotalsProcessor(),
-            outputStructType=RUNNING_OUTPUT,
-            outputMode="Update",
-            timeMode="None",
-        )
-
-    class AlertGateProcessor(StatefulProcessor):
-        """S35: alert_gate_per_key's EXACT semantics on the Spark 4
-        stateful-processor API (round-7 verdict task #8 — the streaming
-        state surface tracks the current API before the old one ages
-        out). Same deterministic fold: first above-threshold event per
-        key alerts, breaches inside the event-time cooldown are counted
-        into the NEXT alert's n_suppressed (none lost), rows sorted by
-        (ts, event_id) within each batch. State = one named ValueState
-        slot (last alert epoch, suppressed count) instead of the
-        positional state struct — the API difference is the slot
-        registry; the semantics are pinned equal to the S34 operator
-        and the sequential Python fold in test_s35."""
-
-        def __init__(self, threshold: float, cooldown_s: float) -> None:
-            self._threshold = threshold
-            self._cooldown_s = cooldown_s
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._gate = handle.getValueState(
-                "gate", "last_alert_sec double, suppressed long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            last, supp = (
-                tuple(self._gate.get())
-                if self._gate.exists()
-                else (float("-inf"), 0)
-            )
-            pdf = pd.concat(list(rows), ignore_index=True)
-            pdf = pdf.sort_values(["ts", "event_id"])
-            out_ts, out_v, out_supp = [], [], []
-            for ts_, v in zip(pdf["ts"], pdf["value"]):
-                if float(v) < self._threshold:
-                    continue
-                sec = ts_.timestamp()
-                if sec - last >= self._cooldown_s:
-                    out_ts.append(ts_)
-                    out_v.append(float(v))
-                    out_supp.append(supp)
-                    last = sec
-                    supp = 0
-                else:
-                    supp += 1
-            self._gate.update((last, supp))
-            yield pd.DataFrame(
-                {
-                    "event_type": pd.Series(
-                        [key[0]] * len(out_ts), dtype="object"
-                    ),
-                    "ts": pd.Series(out_ts, dtype="datetime64[ns]"),
-                    "value": pd.Series(out_v, dtype="float64"),
-                    "n_suppressed": pd.Series(out_supp, dtype="int64"),
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    def alert_gate_tws(
-        stream: DataFrame, threshold: float, cooldown_s: float = 3600.0
-    ) -> DataFrame:
-        """alert_gate_per_key on transformWithStateInPandas."""
-        return stream.groupBy("event_type").transformWithStateInPandas(
-            statefulProcessor=AlertGateProcessor(threshold, cooldown_s),
-            outputStructType=ALERT_OUTPUT,
-            outputMode="Append",
-            timeMode="None",
-        )
-
-except ImportError:  # pragma: no cover - pyspark < 4.0 or no protobuf
-    RunningTotalsProcessor = None  # type: ignore[assignment]
-    AlertGateProcessor = None  # type: ignore[assignment]
-
-    def running_totals_tws(stream: DataFrame) -> DataFrame:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires pyspark >= 4.0 and protobuf"
-        )
-
-    def alert_gate_tws(
-        stream: DataFrame, threshold: float, cooldown_s: float = 3600.0
-    ) -> DataFrame:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires pyspark >= 4.0 and protobuf"
-        )
-
-
 ALERT_OUTPUT = T.StructType(
     [
         T.StructField("event_type", T.StringType()),

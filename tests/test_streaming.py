@@ -8,8 +8,8 @@ S01 roundtrip · S02 checkpoint resume · S03/S03b crash → at-least-once
 late-drop · S06/S06b stream dedup (± watermark) · S07 session window ·
 S08 stateful running totals · S09 stream-stream join · S10 custom Python
 source offsets · S11 exactly-once epoch sink · S12 Avro wire roundtrip ·
-S13 stream-static broadcast enrichment · S14 transformWithState
-(protobuf-gated) · S15 reader-options rate limiting · S16 stream OHLC ==
+S11c continuous epoch sink until stop() · S13 stream-static broadcast
+enrichment · S15 reader-options rate limiting · S16 stream OHLC ==
 batch OHLC (merge-compatible min_by/max_by) · S17 per-record callback
 migration shim (executor-side on_message_received) · S18 left-outer
 stream-stream join (null emission on watermark-driven state eviction) ·
@@ -531,6 +531,52 @@ def test_s11b_epoch_file_sink_over_a_file_uri(spark, tmp_path):
     _epoch_sink_replays_exactly_once(spark, str(tmp_path), (tmp_path / "epochs").as_uri())
 
 
+def test_s11c_epoch_file_sink_runs_until_stopped(spark, tmp_path):
+    """The continuous connector path: an EpochFileSink with
+    ``stop_at_end=False`` runs in a thread across two file arrivals until
+    ``stop()``. It ends STOPPED, its thread exits, and each record lands
+    once across the epoch directories."""
+    import threading
+    import time
+
+    from pyconnect_spark.streaming.sink import EpochFileSink
+
+    tmp = str(tmp_path)
+    topic, staging, out = (os.path.join(tmp, d) for d in ("topic-s11c", "staging", "epochs"))
+    os.makedirs(topic)
+    os.makedirs(staging)
+    sink = EpochFileSink(spark, _sink_cfg(tmp, topic, "s11c"), out_dir=out, stop_at_end=False)
+    runner = threading.Thread(target=sink.run, name="s11c-sink")
+    runner.start()
+    try:
+        deadline = time.time() + 60
+        while sink._query is None and runner.is_alive() and time.time() < deadline:
+            time.sleep(0.05)
+        assert sink._query is not None
+        for i, part in enumerate((RECORDS[:8], RECORDS[8:])):
+            name = f"f{i}.jsonl"
+            with open(os.path.join(staging, name), "w") as f:
+                for k, v in part:
+                    f.write(json.dumps({"key": k, "value": v}) + "\n")
+            os.rename(os.path.join(staging, name), os.path.join(topic, name))
+            sink._query.processAllAvailable()
+    finally:
+        sink.stop()
+        runner.join(timeout=60)
+    assert not runner.is_alive()
+    assert sink.status is Status.STOPPED
+    epochs = sorted(d for d in os.listdir(out) if d.endswith(".jsonl"))
+    assert len(epochs) == 2
+    rows = [
+        rec
+        for d in epochs
+        for part in sorted(os.listdir(os.path.join(out, d)))
+        if part.startswith("part-")
+        for rec in _read_jsonl(os.path.join(out, d, part))
+    ]
+    assert sorted(rows) == sorted(RECORDS)
+
+
 def test_s17_record_callback_shim(spark, tmp_path):
     """RecordCallbackSink: per-record on_message_received migration shim —
     the callback observes every record individually, executor-side (each
@@ -736,52 +782,6 @@ def test_s13_stream_static_enrich(spark, tmp_path):
     assert len(stream_rows) == 20
     # users 3,4 have no tier -> survive with null (left semantics)
     assert any(r[-1] is None for r in stream_rows)
-
-
-def test_s14_transform_with_state(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 stateful-processor API): same
-    running-totals semantics as S08, state survives restart."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState's state-server protocol needs protobuf",
-    )
-    from pyconnect_spark.streaming.stateful import RunningTotalsProcessor, running_totals_tws
-
-    if RunningTotalsProcessor is None:
-        pytest.skip("stateful-processor API unavailable")
-
-    d = tmp_path / "tws-in"
-    d.mkdir()
-    ckpt = str(tmp_path / "tws-ckpt")
-
-    def run_once(fname, rows):
-        with open(d / fname, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-        collected = []
-        stream = spark.readStream.schema("user_id long, value double").json(str(d))
-        q = (
-            running_totals_tws(stream)
-            .writeStream.outputMode("update")
-            .foreachBatch(lambda b, eid: collected.extend(b.collect()))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return {r["user_id"]: (r["n_events"], r["total_value"]) for r in collected}
-
-    first = run_once(
-        "b1.jsonl",
-        [
-            {"user_id": 1, "value": 10.0},
-            {"user_id": 1, "value": 5.0},
-            {"user_id": 2, "value": 1.0},
-        ],
-    )
-    assert first[1] == (2, 15.0) and first[2] == (1, 1.0)
-    second = run_once("b2.jsonl", [{"user_id": 1, "value": 2.5}])
-    assert second[1] == (3, 17.5)
 
 
 def test_s15_rate_limited_batches(spark, tmp_path):
@@ -1907,98 +1907,6 @@ def test_s34_alert_gate_cooldown_suppression(spark, tmp_path):
     assert got == sorted(ref), (got, ref)
 
     # accounting: breaches = alerts + suppressed-in-alerts + trailing state
-    n_breaches = sum(1 for r in chunk1 + chunk2 if r["value"] >= threshold)
-    trailing = sum(s for _, s in state.values())
-    assert n_breaches == len(got) + sum(g[3] for g in got) + trailing
-
-
-def test_s35_alert_gate_tws_equals_s34_semantics(spark, tmp_path):
-    """S35 (round-7 verdict task #8): the alert gate on
-    transformWithStateInPandas — the Spark 4 stateful-processor API —
-    must emit the SAME alert stream as S34's applyInPandasWithState
-    operator: across two drains, the output equals the sequential
-    Python fold over the event-time-ordered sequence, including a
-    drain-2 breach suppressed by a drain-1 alert's cooldown (named
-    ValueState slot survives the batch boundary) and the
-    nothing-is-lost suppressed-counter accounting."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState's state-server protocol needs protobuf",
-    )
-    from pyconnect_spark.streaming.stateful import AlertGateProcessor, alert_gate_tws
-
-    if AlertGateProcessor is None:
-        pytest.skip("stateful-processor API unavailable")
-
-    threshold, cooldown = 5.0, 3600.0
-    d = tmp_path / "tws-alert-in"
-    d.mkdir()
-    ckpt = str(tmp_path / "tws-alert-ckpt")
-    schema = "event_id long, ts timestamp, event_type string, value double"
-
-    def mk(eid, hh, mm, k, v):
-        return {
-            "event_id": eid,
-            "ts": f"2024-03-01 {hh:02d}:{mm:02d}:00",
-            "event_type": k,
-            "value": v,
-        }
-
-    # same scenario as test_s34 so the two APIs are pinned against the
-    # same oracle (and hence against each other)
-    chunk1 = [
-        mk(1, 0, 0, "a", 9.0),
-        mk(2, 0, 30, "a", 8.0),
-        mk(3, 1, 30, "a", 7.0),
-        mk(4, 0, 10, "b", 2.0),
-        mk(5, 0, 20, "b", 6.0),
-    ]
-    chunk2 = [
-        mk(6, 2, 0, "a", 9.9),
-        mk(7, 2, 45, "a", 6.5),
-        mk(8, 0, 50, "b", 7.7),
-    ]
-
-    collected = []
-
-    def run_once(fname, rows):
-        with open(d / fname, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-        stream = spark.readStream.schema(schema).json(str(d))
-        q = (
-            alert_gate_tws(stream, threshold, cooldown)
-            .writeStream.outputMode("append")
-            .foreachBatch(lambda b, eid: collected.extend(b.collect()))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run_once("c1.jsonl", chunk1)
-    run_once("c2.jsonl", chunk2)
-
-    got = sorted(
-        (r["event_type"], r["ts"].strftime("%H:%M"), r["value"], r["n_suppressed"])
-        for r in collected
-    )
-
-    ref = []
-    state = {}
-    for r in sorted(chunk1 + chunk2, key=lambda r: (r["event_type"], r["ts"], r["event_id"])):
-        if r["value"] < threshold:
-            continue
-        hh, mm = int(r["ts"][11:13]), int(r["ts"][14:16])
-        sec = hh * 3600 + mm * 60
-        last, supp = state.get(r["event_type"], (float("-inf"), 0))
-        if sec - last >= cooldown:
-            ref.append((r["event_type"], r["ts"][11:16], r["value"], supp))
-            state[r["event_type"]] = (sec, 0)
-        else:
-            state[r["event_type"]] = (last, supp + 1)
-    assert got == sorted(ref), (got, ref)
-
     n_breaches = sum(1 for r in chunk1 + chunk2 if r["value"] >= threshold)
     trailing = sum(s for _, s in state.values())
     assert n_breaches == len(got) + sum(g[3] for g in got) + trailing

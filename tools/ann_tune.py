@@ -1,6 +1,7 @@
-"""ANN parameter sweep: recall@5 + latency for sm03 (hyperplane-LSH),
-sm05 (IVF), sm06 (MLlib BucketedRandomProjectionLSH) against brute-force
-cosine ground truth, at a chosen SF.
+"""ANN recall check and parameter sweep: recall@5 + latency of the
+registered sm03 (hyperplane-LSH), sm05 (IVF) and sm06 (MLlib
+BucketedRandomProjectionLSH) queries against brute-force cosine ground
+truth, then sweeps of sm03's and sm06's parameters, at a chosen SF.
 
 Usage: python tools/ann_tune.py [sf_dir]
 """
@@ -56,6 +57,15 @@ def main():
     truth = ground_truth(spark)
     print(f"SF={SF}  ground truth ready", flush=True)
 
+    # --- the registered queries, as declared ---
+    from pyconnect_spark.registry import ALL
+
+    builders = ALL.builders()
+    for name in ("sm03_ann_lsh", "sm05_ann_ivf", "sm06_ann_mllib_lsh"):
+        t0 = time.time()
+        r = recall(builders[name](spark, SF), truth)
+        print(f"{name:22s} recall@5={r:.2f}  {time.time()-t0:.1f}s", flush=True)
+
     # --- sm03: hyperplane LSH, vary n_planes ---
     from pyconnect_spark.operators import similarity as S
 
@@ -83,11 +93,6 @@ def main():
         )
         r = recall(cand, truth)
         print(f"sm03 n_planes={n_planes:2d}  recall@5={r:.2f}  {time.time()-t0:.1f}s", flush=True)
-
-    # --- sm05: IVF, vary n_probe via existing impl signature ---
-    t0 = time.time()
-    df = S.REGISTRY.queries()["sm05_ann_ivf"].builder(spark, SF)
-    print(f"sm05 default     recall@5={recall(df, truth):.2f}  {time.time()-t0:.1f}s", flush=True)
 
     # --- sm06: MLlib BRP-LSH grid ---
     from pyspark.ml.feature import BucketedRandomProjectionLSH
